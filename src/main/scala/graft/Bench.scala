@@ -66,6 +66,22 @@ object Bench {
     val gcSamples =
       scala.collection.mutable.Map.empty[String, List[Double]]
         .withDefaultValue(Nil)
+    // storage hygiene between measurements (outside the timer):
+    // localCheckpoint blocks from Settle.shared outlive their query
+    // until the async ContextCleaner gets around to them — across a
+    // 230-query serial pass they stack up, and the eviction pressure
+    // swung the cached heavies 2.5x in the r10 bench runs (19.2 -> 47.5
+    // s on identical code). Dropping persisted RDDs and the SQL cache at
+    // the query boundary (blocking, so the next measurement starts from
+    // the same empty-storage state) makes each run's memory conditions
+    // identical. Driver-side model caches (codebooks/centroids) and
+    // build-once parquet artifacts live outside block storage and are
+    // untouched.
+    def dropStorage(): Unit = {
+      spark.sharedState.cacheManager.clearCache()
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = true))
+    }
     // (seconds, wall-clock start) per run: the start stamps ride the
     // artifact so a temporal host stall is one tool call to spot
     // (VERDICT r16 #4 — the r16 outlier attribution was done by hand)
@@ -78,22 +94,7 @@ object Bench {
         if (gcProbe) gcSamples(name) = (gcNow() - g0) :: gcSamples(name)
         Some(((System.nanoTime() - t0) / 1e9, s0))
       } catch { case _: Throwable => None }
-      finally {
-        // storage hygiene between measurements (outside the timer):
-        // localCheckpoint blocks from withCached-style operators outlive
-        // their query until the async ContextCleaner gets around to them —
-        // across a 230-query serial pass they stack up, and the eviction
-        // pressure swung the cached heavies 2.5x in the r10 driver runs
-        // (19.2 -> 47.5 s on identical code). Dropping persisted RDDs and
-        // the SQL cache at the query boundary (blocking, so the next
-        // measurement starts from the same empty-storage state) makes
-        // each run's memory conditions identical. Driver-side model
-        // caches (codebooks/centroids) and build-once parquet artifacts
-        // live outside block storage and are untouched.
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-      }
+      finally dropStorage()
     }
     // ---- drift calibration anchor (VERDICT r12 item 1) ----
     // Raw wall-clock on this harness drifts up to ~28% between
@@ -133,9 +134,7 @@ object Bench {
       // probes' residue (shuffle scratch + heap churn) inflated the
       // next measured query ~30% (sim_sparse_topk 3.40 -> 4.44 s),
       // i.e. the drift instrument itself was perturbing the samples
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      dropStorage()
       System.gc()
       (cpu, sh)
     }

@@ -25,8 +25,8 @@ object Pipeline {
   /** Retention tiers (config.yaml:112-115: bronze 30 / silver 90 / gold
     * 365 days). Bronze + Silver are partitioned-parquet sweeps; Gold is a
     * DB-side DELETE like the reference's cleanup_old_data
-    * (sql/schema.sql:259-286). `asOf` is injectable for the parquet
-    * sweeps' boundary tests. */
+    * (sql/schema.sql:259-286). `asOf` is the one clock every tier's
+    * cutoff counts back from; injectable for the boundary tests. */
   case class Retention(
       bronzeDays: Int = 30,
       silverDays: Int = 90,
@@ -86,67 +86,69 @@ object Pipeline {
     // piggybacked on the job instead of the reference's recount pass
     // (silver_processor.py:321-327, SURVEY §2.11).
     val silverPath = s"${cfg.warehouseDir}/silver"
+    val goldPath = s"${cfg.warehouseDir}/gold/events_daily" // writer AND sweep
     val enriched = Silver.enrich(Silver.clean(bronze))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val silverRows = staged[Long]("silver", identity) {
-      val obs = org.apache.spark.sql.Observation("silver_rows")
-      Bronze.writePartitioned(
-        enriched.observe(obs, count(lit(1)).as("rows")),
-        s"$silverPath/events_cleaned", Seq("year", "month"))
-      Bronze.writePartitioned(
-        Silver.dailyAgg(enriched), s"$silverPath/events_daily_agg", Seq("year", "month"))
-      Bronze.writePartitioned(
-        Silver.hourlyAgg(enriched), s"$silverPath/events_hourly_agg", Seq("year", "month"))
-      obs.get("rows").asInstanceOf[Long]
+    // released in a finally, so a failed run (a Scheduler tick whose gold
+    // load throws) leaves nothing cached behind
+    val (silverRows, goldTiers, (dups, nulls, total)) = Settle.using(enriched) {
+      val silverRows = staged[Long]("silver", identity) {
+        val obs = org.apache.spark.sql.Observation("silver_rows")
+        Bronze.writePartitioned(
+          enriched.observe(obs, count(lit(1)).as("rows")),
+          s"$silverPath/events_cleaned", Seq("year", "month"))
+        Bronze.writePartitioned(
+          Silver.dailyAgg(enriched), s"$silverPath/events_daily_agg", Seq("year", "month"))
+        Bronze.writePartitioned(
+          Silver.hourlyAgg(enriched), s"$silverPath/events_hourly_agg", Seq("year", "month"))
+        obs.get("rows").asInstanceOf[Long]
+      }
+
+      // 3. gold: idempotent load of all three tiers (detailed + daily +
+      // hourly, gold_loader.py:357-370 — the reference loads all three, not
+      // just the daily rollup). JDBC if configured, else parquet dedup-merge
+      // of the daily tier.
+      val goldTiers = staged[(Long, Long, Long)]("gold_load",
+        t => t._1 + t._2 + t._3) {
+        val daily = spark.read.parquet(s"$silverPath/events_daily_agg")
+          .select(col("event_type"), col("year"), col("month"), col("day"),
+            make_date(col("year"), col("month"), col("day")).as("date"),
+            col("avg_value"), col("min_value"), col("max_value"),
+            col("sum_value"), col("record_count"), col("distinct_users"))
+        cfg.jdbcUrl match {
+          case Some(url) =>
+            ensureGoldTables(url)
+            val detailed = spark.read.parquet(s"$silverPath/events_cleaned")
+              .select("event_id", "ts", "user_id", "event_type", "value",
+                "data_quality_score", "heat_index")
+            val hourly = spark.read.parquet(s"$silverPath/events_hourly_agg")
+              .select(col("event_type"), col("year"), col("month"), col("day"),
+                col("hour"),
+                make_timestamp(col("year"), col("month"), col("day"), col("hour"),
+                  lit(0), lit(0)).as("datetime"),
+                col("avg_value"), col("min_value"), col("max_value"),
+                col("record_count"), col("distinct_users"))
+            val d = JdbcSink.idempotentAppend(spark, detailed, url,
+              "gold_events_detailed", Seq("event_id"))
+            val dd = JdbcSink.idempotentAppend(spark, daily, url,
+              "gold_events_daily", Seq("event_type", "year", "month", "day"))
+            val hh = JdbcSink.idempotentAppend(spark, hourly, url,
+              "gold_events_hourly", Seq("event_type", "year", "month", "day", "hour"))
+            (d, dd, hh)
+          case None =>
+            (0L, parquetGoldLoad(spark, daily, goldPath), 0L)
+        }
+      }
+
+      // 4. quality gate (weather_pipeline_dag.py:166-223): nonzero output,
+      // duplicate natural keys, critical-null RATIO under the reference's
+      // threshold (config.yaml:107 — 10%, not zero-tolerance).
+      (silverRows, goldTiers, gateMetrics(enriched, Seq("user_id", "ts"),
+        col("user_id").isNull || col("value").isNull))
     }
     val bronzeRows = bronzeObs.get("rows").asInstanceOf[Long]
-
-    // 3. gold: idempotent load of all three tiers (detailed + daily +
-    // hourly, gold_loader.py:357-370 — the reference loads all three, not
-    // just the daily rollup). JDBC if configured, else parquet dedup-merge
-    // of the daily tier.
-    val goldPath = s"${cfg.warehouseDir}/gold/events_daily" // writer AND sweep
-    val goldTiers = staged[(Long, Long, Long)]("gold_load",
-      t => t._1 + t._2 + t._3) {
-      val daily = spark.read.parquet(s"$silverPath/events_daily_agg")
-        .select(col("event_type"), col("year"), col("month"), col("day"),
-          make_date(col("year"), col("month"), col("day")).as("date"),
-          col("avg_value"), col("min_value"), col("max_value"),
-          col("sum_value"), col("record_count"), col("distinct_users"))
-      cfg.jdbcUrl match {
-        case Some(url) =>
-          ensureGoldTables(url)
-          val detailed = spark.read.parquet(s"$silverPath/events_cleaned")
-            .select("event_id", "ts", "user_id", "event_type", "value",
-              "data_quality_score", "heat_index")
-          val hourly = spark.read.parquet(s"$silverPath/events_hourly_agg")
-            .select(col("event_type"), col("year"), col("month"), col("day"),
-              col("hour"),
-              make_timestamp(col("year"), col("month"), col("day"), col("hour"),
-                lit(0), lit(0)).as("datetime"),
-              col("avg_value"), col("min_value"), col("max_value"),
-              col("record_count"), col("distinct_users"))
-          val d = JdbcSink.idempotentAppend(spark, detailed, url,
-            "gold_events_detailed", Seq("event_id"))
-          val dd = JdbcSink.idempotentAppend(spark, daily, url,
-            "gold_events_daily", Seq("event_type", "year", "month", "day"))
-          val hh = JdbcSink.idempotentAppend(spark, hourly, url,
-            "gold_events_hourly", Seq("event_type", "year", "month", "day", "hour"))
-          (d, dd, hh)
-        case None =>
-          (0L, parquetGoldLoad(spark, daily, goldPath), 0L)
-      }
-    }
     val goldRows = goldTiers._1 + goldTiers._2 + goldTiers._3
-
-    // 4. quality gate (weather_pipeline_dag.py:166-223): nonzero output,
-    // duplicate natural keys, critical-null RATIO under the reference's
-    // threshold (config.yaml:107 — 10%, not zero-tolerance).
-    val (dups, nulls, total) = gateMetrics(enriched, Seq("user_id", "ts"),
-      col("user_id").isNull || col("value").isNull)
     val nullRatio = if (total == 0) 0.0 else nulls.toDouble / total
     val gate = silverRows > 0 && dups == 0 && nullRatio <= cfg.maxNullRatio
-    enriched.unpersist()
 
     // 5. retention (cleanup_old_data analog; DAG task
     // weather_pipeline_dag.py:306-313 runs after the quality gate):
@@ -159,11 +161,12 @@ object Pipeline {
             .map(t => Bronze.retentionSweep(spark, s"$silverPath/$t", r.silverDays, r.asOf))
             .sum
         val dbDeleted = cfg.jdbcUrl.fold(0L) { url =>
-          (JdbcSink.retentionDelete(url, "gold_events_detailed", "\"ts\"", r.goldDays) +
+          val cutoff = r.asOf.minusDays(r.goldDays)
+          (JdbcSink.retentionDelete(url, "gold_events_detailed", "\"ts\"", cutoff) +
             JdbcSink.retentionDelete(url, "gold_events_daily", "\"date\"",
-              r.goldDays, dateTyped = true) +
+              cutoff, dateTyped = true) +
             JdbcSink.retentionDelete(url, "gold_events_hourly", "\"datetime\"",
-              r.goldDays)).toLong
+              cutoff)).toLong
         }
         // parquet-mode gold: goldDays applies here too (sweep granularity
         // is the year/month partition — a month drops once wholly expired)
@@ -206,13 +209,13 @@ object Pipeline {
     val fresh = (
       if (existing.columns.isEmpty) daily
       else JdbcSink.newRowsOnly(daily, existing, Seq("event_type", "year", "month", "day"))
-    ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    )
+    Settle.using(fresh) {
       val n = fresh.count()
       if (n > 0) fresh.write.mode("append")
         .partitionBy("year", "month").parquet(goldPath)
       n
-    } finally fresh.unpersist()
+    }
   }
 
   /** One-job quality metrics: (duplicate-key count, critical-null rows,

@@ -20,13 +20,13 @@ object PlanDump {
       if (args.length > 3) args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     // SPARK_GRAFT_LINEAGE=1 keeps logical plans visible through the
-    // operators' withCached/materialized checkpoints (the runtime plan
+    // operators' Settle.shared checkpoints (the runtime plan
     // reads a settled ExistingRDD there; with lineage on, the dump
     // shows the full subtree INCLUDING any sharing the checkpoint
     // settles — read such dumps as "what would recompute", not "what
     // executes")
     if (sys.env.get("SPARK_GRAFT_LINEAGE").contains("1"))
-      sys.props("graft.explain.lineage") = "true"
+      sys.props(Settle.LineageProp) = "true"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
     val spark = SparkSession.builder()

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 import graft.functions.TextFns
 
 /** Length-bucketed batch packing — the trainer data-loader step that
@@ -51,17 +51,17 @@ object Batching {
   }
 
   /** The rank-and-roll-up core over a prepared (doc_id, tokens, bucket)
-    * frame — split from the tokenize step so `Probe lengthbatch` can
-    * feed synthetic token distributions (the degenerate one-hot-bucket
-    * web-corpus shape) at tier scale. */
+    * frame — split from the tokenize step so synthetic token
+    * distributions (the degenerate one-hot-bucket web-corpus shape) can
+    * be fed at tier scale (SCALE.md). */
   private[graft] def batchesOn(base: DataFrame,
       hotGroupsOverride: Option[Boolean] = None): DataFrame =
     // the token projection feeds up to three passes once the dial's
     // hot path engages (sample/exact pre-check + groupedRunningSum's
     // two scans) — cache it for the duration; the checkpointed result
     // is batch-grain (corpus/BatchDocs rows), far smaller than the input
-    Dedup.withCached(base) { b =>
-      val ranked = Scale.groupRanks(b, Seq("bucket"),
+    Settle.using(base)(Settle.shared {
+      val ranked = Scale.groupRanks(base, Seq("bucket"),
         Seq(col("tokens"), col("doc_id")), "r",
         hotGroupsOverride = hotGroupsOverride)
       ranked
@@ -81,7 +81,7 @@ object Batching {
         .select(col("bucket"), col("batch_id"), col("n_docs"),
           col("max_tokens"), col("sum_tokens"), col("capacity"),
           col("pad_waste_permille"))
-    }
+    })
 
   def qLengthBatches(spark: SparkSession, dir: String): DataFrame =
     lengthBatches(Tables.documents(spark, dir))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 import graft.functions.TextFns
 
 /** Trained text classification — the fastText-LID-shaped curation
@@ -56,38 +56,38 @@ object Classify {
       maxVocab: Int = 50000): NbModel = {
     val words = train.select(col(labelCol).as("label"),
       explode(TextFns.words(col("text"))).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the vocab cap is itself distributed: per-gram totals, then a
-    // TakeOrdered top-maxVocab (per-partition top-k, no global sort or
-    // single-partition window), then a broadcast semi-join — the only
-    // collected rows are the capped model
-    val keptGrams = words.groupBy("w").count()
-      .orderBy(col("count").desc, col("w")).limit(maxVocab).select("w")
-    val kept = words.groupBy("label", "w").count()
-      .join(broadcast(keptGrams), Seq("w"), "left_semi")
-      .select("label", "w", "count").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    val docCounts = train.groupBy(col(labelCol).as("label")).count()
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    val labels = docCounts.keys.toIndexedSeq.sorted
-    val nDocs = docCounts.values.sum.toDouble
-    // token totals per label over the FULL split (capped grams change
-    // which grams carry their own logp, not the denominators)
-    val tokenTotals = words.groupBy("label").count()
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    val vocabSize = kept.map(_._2).distinct.length.toLong
-    def fx(x: Double): Long = math.round(math.log(x) * LogScale)
-    val priors = labels.map(l => fx(docCounts(l) / nDocs))
-    val defaults = labels.map(l =>
-      fx(1.0 / (tokenTotals.getOrElse(l, 0L) + vocabSize)))
-    val byGram = kept.groupBy(_._2).map { case (g, rows) =>
-      val perLabel = rows.map(r => (r._1, r._3)).toMap
-      g -> labels.map(l =>
-        fx((perLabel.getOrElse(l, 0L) + 1.0) /
-          (tokenTotals.getOrElse(l, 0L) + vocabSize)))
+    Settle.using(words) {
+      // the vocab cap is itself distributed: per-gram totals, then a
+      // TakeOrdered top-maxVocab (per-partition top-k, no global sort or
+      // single-partition window), then a broadcast semi-join — the only
+      // collected rows are the capped model
+      val keptGrams = words.groupBy("w").count()
+        .orderBy(col("count").desc, col("w")).limit(maxVocab).select("w")
+      val kept = words.groupBy("label", "w").count()
+        .join(broadcast(keptGrams), Seq("w"), "left_semi")
+        .select("label", "w", "count").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      val docCounts = train.groupBy(col(labelCol).as("label")).count()
+        .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+      val labels = docCounts.keys.toIndexedSeq.sorted
+      val nDocs = docCounts.values.sum.toDouble
+      // token totals per label over the FULL split (capped grams change
+      // which grams carry their own logp, not the denominators)
+      val tokenTotals = words.groupBy("label").count()
+        .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+      val vocabSize = kept.map(_._2).distinct.length.toLong
+      def fx(x: Double): Long = math.round(math.log(x) * LogScale)
+      val priors = labels.map(l => fx(docCounts(l) / nDocs))
+      val defaults = labels.map(l =>
+        fx(1.0 / (tokenTotals.getOrElse(l, 0L) + vocabSize)))
+      val byGram = kept.groupBy(_._2).map { case (g, rows) =>
+        val perLabel = rows.map(r => (r._1, r._3)).toMap
+        g -> labels.map(l =>
+          fx((perLabel.getOrElse(l, 0L) + 1.0) /
+            (tokenTotals.getOrElse(l, 0L) + vocabSize)))
+      }
+      NbModel(labels, priors, defaults, byGram, vocabSize)
     }
-    words.unpersist()
-    NbModel(labels, priors, defaults, byGram, vocabSize)
   }
 
   /** Broadcast-model prediction: one explode, one broadcast join, one
@@ -297,12 +297,12 @@ object Classify {
       .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
       .groupBy(col("lang"), col("pred_lang"))
       .agg(count(lit(1)).as("n"))
-    Dedup.withCached(conf) { c =>
-      val tot = c.agg(sum(col("n")).as("n_total"))
-      val diag = c.filter(col("lang") === col("pred_lang"))
+    Settle.using(conf)(Settle.shared {
+      val tot = conf.agg(sum(col("n")).as("n_total"))
+      val diag = conf.filter(col("lang") === col("pred_lang"))
         .agg(coalesce(sum(col("n")), lit(0L)).as("n_agree"))
-      val e = c.groupBy(col("lang")).agg(sum(col("n")).as("r"))
-        .join(c.groupBy(col("pred_lang").as("lang"))
+      val e = conf.groupBy(col("lang")).agg(sum(col("n")).as("r"))
+        .join(conf.groupBy(col("pred_lang").as("lang"))
           .agg(sum(col("n")).as("cc")), Seq("lang"))
         .agg(sum(col("r") * col("cc")).as("e_num"))
       tot.crossJoin(broadcast(diag)).crossJoin(broadcast(e))
@@ -318,7 +318,7 @@ object Classify {
             |  (CAST(-kappa_num AS DECIMAL(38,0)) * 1000 + kappa_den - 1)
             |    div CAST(kappa_den AS DECIMAL(38,0)) AS BIGINT)
             |END""".stripMargin))
-    }
+    })
   }
 
   def qClassifyKappa(spark: SparkSession, dir: String): DataFrame =
@@ -339,25 +339,25 @@ object Classify {
       .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
       .select(col("doc_id"), col("margin"),
         when(col("pred_lang") === col("lang"), 1L).otherwise(0L).as("ok"))
-    Dedup.withCached(scored) { s =>
+    Settle.using(scored)(Settle.shared {
       // denominator = SCORED rows, matching the twin's `sc` CTE — a doc
       // the prediction pass drops (e.g. null text) must not shift the
       // bin boundaries (review r15 finding)
-      val n = s.count()
+      val n = scored.count()
       // plain if/else, NOT a non-local return: a `return` inside this
-      // closure would throw NonLocalReturnControl past withCached's
+      // block would throw NonLocalReturnControl past Settle.shared's
       // localCheckpoint (deprecated in 2.13, gone in Scala 3)
       if (n == 0L)
-        s.select(lit(0L).as("bin"), lit(0L).as("n_docs"),
+        scored.select(lit(0L).as("bin"), lit(0L).as("n_docs"),
           lit(0L).as("n_correct"), lit(0L).as("acc_milli")).limit(0)
       else
-        Scale.globalRankWithTotal(s, Seq(col("margin"), col("doc_id")),
+        Scale.globalRankWithTotal(scored, Seq(col("margin"), col("doc_id")),
           "rnk", 32, knownTotal = n)._1
           .withColumn("bin", expr(s"((rnk - 1) * 10) div ${n}L"))
           .groupBy(col("bin"))
           .agg(count(lit(1)).as("n_docs"), sum(col("ok")).as("n_correct"))
           .withColumn("acc_milli", expr("(1000 * n_correct) div n_docs"))
-    }
+    })
   }
 
   def qClassifyCalibration(spark: SparkSession, dir: String): DataFrame =

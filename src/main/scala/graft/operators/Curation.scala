@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 import graft.functions.TextFns
 
 /** Stage ledger for [[Curation.curate]]: row counts entering/leaving
@@ -456,45 +456,46 @@ object Curation {
       .observe(inputObs, count(lit(1)).as("rows"))
       .filter(col("keep"))
       .drop(funnelSignalCols: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val afterQuality = kept.count()
-    val input = inputObs.get("rows").asInstanceOf[Long]
-    // 2. near-dup removal: every clustered doc except its cluster's min
-    // survivor is a victim; anti-join the victim list out
-    val victims = Dedup.dupClusters(shinglePairs(kept, jaccardThreshold))
-      .filter(col("doc_id") =!= col("cluster_id")).select("doc_id")
-    val deduped = kept.join(broadcast(victims), Seq("doc_id"), "left_anti")
-    // 2b. optional token-weighted mixture rebalance (shares over tokens,
-    // [[sourceMixTokens]]): when on, afterDedup needs its own count
-    // because the split ledger below then counts the post-mixture corpus
-    // survivors come back as a doc_id semi join so the mixture's window
-    // shuffles only its narrow projection, never the text column
-    val (mixed, afterDedupExplicit) = mixtureBp match {
-      case Some(shares) =>
-        (deduped.join(sourceMixTokens(deduped, shares).select("doc_id"),
-          Seq("doc_id"), "left_semi"), Some(deduped.count()))
-      case None => (deduped, None)
+    Settle.using(kept) {
+      val afterQuality = kept.count()
+      val input = inputObs.get("rows").asInstanceOf[Long]
+      // 2. near-dup removal: every clustered doc except its cluster's min
+      // survivor is a victim; anti-join the victim list out
+      val victims = Dedup.dupClusters(shinglePairs(kept, jaccardThreshold))
+        .filter(col("doc_id") =!= col("cluster_id")).select("doc_id")
+      val deduped = kept.join(broadcast(victims), Seq("doc_id"), "left_anti")
+      // 2b. optional token-weighted mixture rebalance (shares over tokens,
+      // [[sourceMixTokens]]): when on, afterDedup needs its own count
+      // because the split ledger below then counts the post-mixture corpus
+      // survivors come back as a doc_id semi join so the mixture's window
+      // shuffles only its narrow projection, never the text column
+      val (mixed, afterDedupExplicit) = mixtureBp match {
+        case Some(shares) =>
+          (deduped.join(sourceMixTokens(deduped, shares).select("doc_id"),
+            Seq("doc_id"), "left_semi"), Some(deduped.count()))
+        case None => (deduped, None)
+      }
+      // 3. deterministic split, then write partitioned by split
+      val tagged = TextAnalysis.withSplit(mixed)
+      Settle.using(tagged) {
+        tagged.drop("bucket").write.mode("overwrite")
+          .partitionBy("split").parquet(s"$outDir/corpus")
+        val splitCounts = tagged.groupBy("split").count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        val afterDedup = afterDedupExplicit.getOrElse(splitCounts.values.sum)
+        val afterMixture = mixtureBp.map(_ => splitCounts.values.sum)
+        // 4. pack the train split; manifest is the batching layer's read
+        // plan. Its row count rides the write as an observe() metric — no
+        // read-back of the file just written.
+        val packObs = org.apache.spark.sql.Observation()
+        packManifest(tagged.filter(col("split") === "train"), capacity, nShards)
+          .observe(packObs, count(lit(1)).as("rows"))
+          .write.mode("overwrite").parquet(s"$outDir/train_pack_manifest")
+        val trainPacks = packObs.get("rows").asInstanceOf[Long]
+        CurationReport(input, afterQuality, afterDedup, splitCounts, trainPacks,
+          afterMixture)
+      }
     }
-    // 3. deterministic split, then write partitioned by split
-    val tagged = TextAnalysis.withSplit(mixed)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    tagged.drop("bucket").write.mode("overwrite")
-      .partitionBy("split").parquet(s"$outDir/corpus")
-    val splitCounts = tagged.groupBy("split").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val afterDedup = afterDedupExplicit.getOrElse(splitCounts.values.sum)
-    val afterMixture = mixtureBp.map(_ => splitCounts.values.sum)
-    // 4. pack the train split; manifest is the batching layer's read
-    // plan. Its row count rides the write as an observe() metric — no
-    // read-back of the file just written.
-    val packObs = org.apache.spark.sql.Observation()
-    packManifest(tagged.filter(col("split") === "train"), capacity, nShards)
-      .observe(packObs, count(lit(1)).as("rows"))
-      .write.mode("overwrite").parquet(s"$outDir/train_pack_manifest")
-    val trainPacks = packObs.get("rows").asInstanceOf[Long]
-    kept.unpersist(); tagged.unpersist()
-    CurationReport(input, afterQuality, afterDedup, splitCounts, trainPacks,
-      afterMixture)
   }
 
   private def shinglePairs(docs: DataFrame, threshold: Double): DataFrame =
@@ -684,14 +685,14 @@ object Curation {
     import spark.implicits._
     val slim = docs.select(col("doc_id"), col("source"),
       TextFns.tokenCount(col("text")).as("token_count"))
-    Dedup.withCached(slim) { s =>
-      val totals = s.groupBy("source").agg(sum(col("token_count")).as("n"))
+    Settle.using(slim)(Settle.shared {
+      val totals = slim.groupBy("source").agg(sum(col("token_count")).as("n"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val t = sharesBp.map { case (src, bp) =>
         totals.getOrElse(src, 0L) * 10000L / bp
       }.min
       val caps = sharesBp.toSeq.map { case (src, bp) => (src, t * bp / 10000L) }
-      val keyed = s.join(broadcast(caps.toDF("source", "_cap")), "source")
+      val keyed = slim.join(broadcast(caps.toDF("source", "_cap")), "source")
         .withColumn("_h", TextFns.md5u56(col("doc_id").cast("string")))
       val hot = hotGroupsOverride.getOrElse(
         Scale.hotGroups(keyed, Seq("source")))
@@ -708,7 +709,7 @@ object Curation {
         .filter(col("start_tok") < col("_cap"))
         .withColumnRenamed("_cap", "source_token_cap")
         .drop("_h", "_cum")
-    }
+    })
   }
 
   def qSourceMixTokens(spark: SparkSession, dir: String): DataFrame =
@@ -768,22 +769,22 @@ object Curation {
         TextFns.tokenCount(col("text")).as("token_count"))
       .repartitionByRange(nPartitions, col("prio").desc, col("doc_id"))
       .withColumn("_pid", spark_partition_id())
-    Dedup.withCached(slim) { s =>
+    Settle.using(slim)(Settle.shared {
       val spark = docs.sparkSession
       import spark.implicits._
-      val totals = s.groupBy(col("_pid")).agg(sum(col("token_count")).as("t"))
+      val totals = slim.groupBy(col("_pid")).agg(sum(col("token_count")).as("t"))
         .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
       val offsets = totals.scanLeft((0, 0L)) { case ((_, acc), (pid, t)) =>
         (pid, acc + t)
       }.tail.zip(totals).map { case ((pid, cum), (_, t)) => (pid, cum - t) }
       val w = Window.partitionBy("_pid").orderBy(col("prio").desc, col("doc_id"))
-      s.join(broadcast(offsets.toSeq.toDF("_pid", "_off")), "_pid")
+      slim.join(broadcast(offsets.toSeq.toDF("_pid", "_off")), "_pid")
         .withColumn("start_tok",
           (sum(col("token_count")).over(w) - col("token_count") + col("_off"))
             .cast("long"))
         .filter(col("start_tok") < budgetTokens)
         .drop("_pid", "_off")
-    }
+    })
   }
 
   def qBudgetSelect(spark: SparkSession, dir: String): DataFrame =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 import graft.functions.TextFns
 
 /** Corpus deduplication operators (training-data-pipeline set).
@@ -40,65 +40,13 @@ object Dedup {
   /** (doc_id, shingles, n_shingles) — words materialized as their own
     * projection so shingling references an attribute (see
     * TextFns.shinglesFromWords). Consumers that explode this MUST go
-    * through [[withCached]]: the cache is an optimizer barrier, without
+    * through [[Settle.using]]: the cache is an optimizer barrier, without
     * which a Generate above the nested transform re-inlines the words
     * split per element (the measured quadratic blowup). */
   private[operators] def shingled(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), TextFns.words(col("text")).as("ws"))
       .select(col("doc_id"), TextFns.shinglesFromWords(col("ws")).as("shingles"))
       .withColumn("n_sh", size(col("shingles")))
-
-  /** Bounded-lifetime cache for the shingled corpus: every near-dup path
-    * reads it several times (candidate generation + verify legs), so it is
-    * persisted, the pair result — orders of magnitude smaller than the
-    * corpus — is eagerly materialized via localCheckpoint (truncating the
-    * lineage so nothing re-reads the cache later), and the corpus cache is
-    * released immediately. Checkpoint blocks for the compact result are
-    * freed by the ContextCleaner once the frame is unreachable, so a
-    * long-lived session doesn't accumulate corpus-sized cache entries.
-    *
-    * Tradeoff: localCheckpoint blocks are executor-local and
-    * unreplicated with TRUNCATED lineage — an executor loss (or
-    * dynamic-allocation decommission) after the checkpoint permanently
-    * fails downstream reads of the result. Right for local/ephemeral
-    * runs; on a cluster with executor churn, configure a checkpoint dir
-    * and use reliable checkpoint() (or persist with replication 2) for
-    * the pair result instead. */
-  private[operators] def withCached(frame: DataFrame)(body: DataFrame => DataFrame): DataFrame = {
-    val cached = frame.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // -Dgraft.explain.lineage=true keeps the logical plan visible (for
-    // plan dumps/inspection) instead of truncating it at the checkpoint
-    try {
-      val out = body(cached)
-      if (sys.props.get("graft.explain.lineage").contains("true")) out
-      else out.localCheckpoint(true)
-    } finally cached.unpersist(false)
-  }
-
-  /** [[withCached]] over SEVERAL intermediate frames with ONE final
-    * checkpoint: persist-in-place registers each frame's plan with the
-    * cache manager, so the body's references to those vals hit cache —
-    * nesting withCached instead would checkpoint (fully materialize)
-    * once per level, and the extra passes are pure overhead. */
-  private[operators] def withCachedAll(frames: DataFrame*)(body: => DataFrame): DataFrame = {
-    frames.foreach(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    try {
-      val out = body
-      if (sys.props.get("graft.explain.lineage").contains("true")) out
-      else out.localCheckpoint(true)
-    } finally frames.foreach(_.unpersist(false))
-  }
-
-  /** Eagerly materialize ONE bounded intermediate consumed by several
-    * downstream legs (same lineage-prop escape hatch and localCheckpoint
-    * reliability caveats as [[withCached]]). Since r17 the
-    * [[Scale.globalRank]] family returns LAZY frames (deterministic
-    * baked buckets need no pinning), so a caller fanning a rank result
-    * into 2+ legs decides the materialization itself — here — instead
-    * of every single-consumer caller paying it. */
-  private[operators] def materialized(frame: DataFrame): DataFrame =
-    if (sys.props.get("graft.explain.lineage").contains("true")) frame
-    else frame.localCheckpoint(true)
 
   /** In-group candidate pair generation (r18, guide §2.3/§2.4): given
     * exploded (key, payload-struct) rows whose per-key group size is
@@ -131,27 +79,30 @@ object Dedup {
     * generation: |A∩B| counted by the co-occurrence count,
     * |A∪B| = |A|+|B|−|A∩B|. */
   def shingleJaccardPairs(docs: DataFrame, threshold: Double,
-      maxShingleDocFreq: Int = 1000): DataFrame = withCached(shingled(docs)) { sh =>
+      maxShingleDocFreq: Int = 1000): DataFrame = {
     // the exploded frame feeds the frequent-shingle scan and the pair
     // grouping — deriving both from the cached doc-level frame means the
     // regex tokenize + shingle transform runs once, not 2×
-    val ex = sh.select(col("doc_id"), col("n_sh"), explode_outer(col("shingles")).as("sh"))
-    // drop ultra-frequent shingles before the pair grouping: the frequent
-    // set is tiny, so it broadcast-anti-joins with no extra shuffle (a
-    // window over every exploded shingle would full-shuffle the corpus)
-    val frequent = ex.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxShingleDocFreq).select(col("sh"))
-    val rare = ex.join(broadcast(frequent), Seq("sh"), "left_anti")
-    // ONE grouped shuffle + in-group i<j pairs replaces the two-leg
-    // self-join (see [[groupedPairs]]); group size ≤ maxShingleDocFreq
-    // by the cap above. Same pairs, same counts, same arithmetic.
-    groupedPairs(rare, "sh", struct(col("doc_id"), col("n_sh")))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("inter"),
-        first(col("a.n_sh")).as("n_a"), first(col("b.n_sh")).as("n_b"))
-      .withColumn("jaccard", col("inter") / (col("n_a") + col("n_b") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    val sh = shingled(docs)
+    Settle.using(sh)(Settle.shared {
+      val ex = sh.select(col("doc_id"), col("n_sh"), explode_outer(col("shingles")).as("sh"))
+      // drop ultra-frequent shingles before the pair grouping: the frequent
+      // set is tiny, so it broadcast-anti-joins with no extra shuffle (a
+      // window over every exploded shingle would full-shuffle the corpus)
+      val frequent = ex.groupBy(col("sh")).agg(count(lit(1)).as("df"))
+        .filter(col("df") > maxShingleDocFreq).select(col("sh"))
+      val rare = ex.join(broadcast(frequent), Seq("sh"), "left_anti")
+      // ONE grouped shuffle + in-group i<j pairs replaces the two-leg
+      // self-join (see [[groupedPairs]]); group size ≤ maxShingleDocFreq
+      // by the cap above. Same pairs, same counts, same arithmetic.
+      groupedPairs(rare, "sh", struct(col("doc_id"), col("n_sh")))
+        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        .agg(count(lit(1)).as("inter"),
+          first(col("a.n_sh")).as("n_a"), first(col("b.n_sh")).as("n_b"))
+        .withColumn("jaccard", col("inter") / (col("n_a") + col("n_b") - col("inter")))
+        .filter(col("jaccard") >= threshold)
+        .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    })
   }
 
   def qNgramJaccard(spark: SparkSession, dir: String): DataFrame =
@@ -188,7 +139,8 @@ object Dedup {
       t2Num: Long = 16, t2Den: Long = 25): DataFrame = {
     require(math.abs(t2Num.toDouble / t2Den - threshold * threshold) < 1e-9,
       "t2Num/t2Den must equal threshold² exactly (integer prefix bound)")
-    withCached(shingled(docs)) { sh =>
+    val sh = shingled(docs)
+    Settle.using(sh)(Settle.shared {
       val ex = sh.select(col("doc_id"), col("n_sh"),
         explode_outer(col("shingles")).as("sh"))
       val df = ex.groupBy(col("sh")).agg(count(lit(1)).as("df"))
@@ -221,7 +173,7 @@ object Dedup {
           col("inter") / (col("n_a") + col("n_b") - col("inter")))
         .filter(col("jaccard") >= threshold)
         .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    }
+    })
   }
 
   def qJaccardPrefix(spark: SparkSession, dir: String): DataFrame =
@@ -260,30 +212,33 @@ object Dedup {
   /** LSH candidate pairs: docs sharing any band hash; then exact-Jaccard
     * verified so the output equals the exact operator (recall at the 0.8
     * threshold with 16×4 bands is ≈1−2e-4 worst case). */
-  def minhashLshPairs(docs: DataFrame, threshold: Double): DataFrame = withCached(shingled(docs)) { sh =>
+  def minhashLshPairs(docs: DataFrame, threshold: Double): DataFrame = {
     // the shingled corpus feeds both the signature build and the verify
     // joins — cached for the duration of this computation only
-    val ex = sh.select(col("doc_id"), explode_outer(col("shingles")).as("sh"))
-    val aggs = (0 until MinhashFuncs).map(i => min(hash(col("sh"), lit(i))).as(s"h$i"))
-    val sigs = ex.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-    val bandCols = (0 until Bands).map { b =>
-      val rows = (0 until RowsPerBand).map(r => col(s"h${b * RowsPerBand + r}"))
-      struct(lit(b).as("band"), hash(rows: _*).as("bh"))
-    }
-    val banded = sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bh").as("bh"))
-    val cands = banded.as("x").join(banded.as("y"), Seq("band", "bh"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-    val withSets = cands
-      .join(sh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a"), col("n_sh").as("n_a")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b"), col("n_sh").as("n_b")), Seq("doc_b"))
-    withSets
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard", col("inter") / (col("n_a") + col("n_b") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    val sh = shingled(docs)
+    Settle.using(sh)(Settle.shared {
+      val ex = sh.select(col("doc_id"), explode_outer(col("shingles")).as("sh"))
+      val aggs = (0 until MinhashFuncs).map(i => min(hash(col("sh"), lit(i))).as(s"h$i"))
+      val sigs = ex.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
+      val bandCols = (0 until Bands).map { b =>
+        val rows = (0 until RowsPerBand).map(r => col(s"h${b * RowsPerBand + r}"))
+        struct(lit(b).as("band"), hash(rows: _*).as("bh"))
+      }
+      val banded = sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
+        .select(col("doc_id"), col("bk.band").as("band"), col("bk.bh").as("bh"))
+      val cands = banded.as("x").join(banded.as("y"), Seq("band", "bh"))
+        .filter(col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+        .distinct()
+      val withSets = cands
+        .join(sh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a"), col("n_sh").as("n_a")), Seq("doc_a"))
+        .join(sh.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b"), col("n_sh").as("n_b")), Seq("doc_b"))
+      withSets
+        .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
+        .withColumn("jaccard", col("inter") / (col("n_a") + col("n_b") - col("inter")))
+        .filter(col("jaccard") >= threshold)
+        .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    })
   }
 
   def qMinhashLsh(spark: SparkSession, dir: String): DataFrame =
@@ -425,13 +380,14 @@ object Dedup {
     // of documents in the before plan); the signature table is one slim
     // (doc_id, simhash) row per doc, so cache it and let both legs
     // explode from the cached frame.
-    withCached(simhash(docs)) { sh =>
+    val sh = simhash(docs)
+    Settle.using(sh)(Settle.shared {
       val cands = if (wideBlocks) simhashCandidates16(sh) else simhashCandidates8(sh)
       cands
         .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
         .filter(col("hamming") <= maxHamming)
         .select(col("doc_a"), col("doc_b"), col("hamming"))
-    }
+    })
   }
 
   /** [[simhashPairs]] under an explicit blocking configuration — the
@@ -443,12 +399,13 @@ object Dedup {
     require(maxHamming <= nBlocks - keep,
       s"(nBlocks=$nBlocks, keep=$keep) blocking incomplete at Hamming $maxHamming")
     // same one-signature-build discipline as [[simhashPairs]] (r17)
-    withCached(simhash(docs)) { sh =>
+    val sh = simhash(docs)
+    Settle.using(sh)(Settle.shared {
       simhashCandidatesBlocked(sh, nBlocks, keep)
         .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
         .filter(col("hamming") <= maxHamming)
         .select(col("doc_a"), col("doc_b"), col("hamming"))
-    }
+    })
   }
 
   /** The measured (8,2)→(14,8) crossover (SCALE.md scaling probe):
@@ -619,47 +576,6 @@ object Dedup {
         stepped("l1") === col("j_id"), "left")
       .select(col("doc_id"), col("label"),
         least(col("l1"), coalesce(col("j_l"), col("l1"))).as("next"))
-  }
-
-  /** Candidate-pair counts per blocking scheme — probe-only
-    * instrumentation (graft.Probe corpus) behind SCALE.md's "colliding
-    * pairs, not n²" scaling table. Runs ONLY candidate generation, no
-    * verification, sharing one cached shingling per call. */
-  private[graft] def candidateCounts(docs: DataFrame,
-      maxShingleDocFreq: Int = 1000, includeShingle: Boolean = true): Map[String, Long] = {
-    val sh = shingled(docs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val ex = sh.select(col("doc_id"), explode_outer(col("shingles")).as("sh"))
-      // the raw shingle-join candidate count is skippable: its distinct
-      // shuffle is the one probe leg whose volume (≈2k pairs/doc on the
-      // dup-dense fixture) exceeds single-host disk near 10^6 docs —
-      // measured, which is WHY the LSH schemes exist (SCALE.md)
-      val shinglePairs = if (!includeShingle) -1L else {
-        val frequent = ex.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-          .filter(col("df") > maxShingleDocFreq).select(col("sh"))
-        val rare = ex.join(broadcast(frequent), Seq("sh"), "left_anti")
-        val a = rare.select(col("doc_id").as("doc_a"), col("sh"))
-        val b = rare.select(col("doc_id").as("doc_b"), col("sh"))
-        a.join(b, Seq("sh")).filter(col("doc_a") < col("doc_b"))
-          .select(col("doc_a"), col("doc_b")).distinct().count()
-      }
-      val aggs = (0 until MinhashFuncs).map(i => min(hash(col("sh"), lit(i))).as(s"h$i"))
-      val sigs = ex.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-      val bandCols = (0 until Bands).map { bnd =>
-        val rows = (0 until RowsPerBand).map(r => col(s"h${bnd * RowsPerBand + r}"))
-        struct(lit(bnd).as("band"), hash(rows: _*).as("bh"))
-      }
-      val banded = sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
-        .select(col("doc_id"), col("bk.band").as("band"), col("bk.bh").as("bh"))
-      val bandPairs = banded.as("x").join(banded.as("y"), Seq("band", "bh"))
-        .filter(col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-        .distinct().count()
-      val blockPairs = simhashCandidates16(simhash(docs))
-        .select(col("doc_a"), col("doc_b")).count()
-      Map("shingle" -> shinglePairs, "minhash_band" -> bandPairs,
-        "simhash_block" -> blockPairs)
-    } finally { sh.unpersist(); () }
   }
 
   def qDedupClusters(spark: SparkSession, dir: String): DataFrame =

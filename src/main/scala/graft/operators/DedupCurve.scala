@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 
 /** Dedup threshold-sweep curve: how many pairs fire, how many documents
   * are touched, and how much data a keep-min dedup would remove at each
@@ -58,8 +58,9 @@ object DedupCurve {
   val Cap = 1000
   val Thresholds = Seq(50, 60, 70, 80, 90)
 
-  def thresholdCurve(docs: DataFrame): DataFrame =
-    Dedup.withCached(Dedup.shingled(docs)) { sh =>
+  def thresholdCurve(docs: DataFrame): DataFrame = {
+    val sh = Dedup.shingled(docs)
+    Settle.using(sh) {
       val ex0 = sh.select(col("doc_id"),
         explode_outer(col("shingles")).as("sh"))
       val hot = ex0.groupBy(col("sh")).agg(count(lit(1)).as("df"))
@@ -139,7 +140,8 @@ object DedupCurve {
       // qualifying pairs are the DEDUP OUTPUT's size (tiny by the same
       // argument that makes the dedup useful) — materialize them once so
       // the three histogram branches don't re-run the candidate join
-      Dedup.withCached(pt.filter(col("pair_t") >= Thresholds.min)) { ptMin =>
+      val ptMin = pt.filter(col("pair_t") >= Thresholds.min)
+      Settle.using(ptMin)(Settle.shared {
         val pairHist = ptMin.groupBy(col("pair_t"))
           .agg(count(lit(1)).as("c"))
         val remHist = ptMin.groupBy(col("doc_b"))
@@ -165,8 +167,9 @@ object DedupCurve {
             coalesce(col("docs_removed"), lit(0L)).as("docs_removed"),
             expr("(coalesce(docs_removed, 0L) * 10000) div n_docs").as("removed_bp"))
           .orderBy(col("threshold_pct"))
-      }
+      })
     }
+  }
 
   def qThresholdCurve(spark: SparkSession, dir: String): DataFrame =
     thresholdCurve(Tables.documents(spark, dir))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 import graft.functions.TextFns
 
 /** Source-vs-corpus distribution divergence — the mixture-design
@@ -28,10 +28,10 @@ object Divergence {
   def sourceDivergence(docs: DataFrame, groupCol: String = "source"): DataFrame = {
     val words = docs.select(col(groupCol),
       explode(TextFns.words(col("text"))).as("w"))
-    Dedup.withCached(words) { ws =>
-      val bySrc = ws.groupBy(col(groupCol), col("w"))
+    Settle.using(words)(Settle.shared {
+      val bySrc = words.groupBy(col(groupCol), col("w"))
         .agg(count(lit(1)).as("cs"))
-      val corpus = ws.groupBy(col("w")).agg(count(lit(1)).as("c"))
+      val corpus = words.groupBy(col("w")).agg(count(lit(1)).as("c"))
       val totals = bySrc.groupBy(col(groupCol)).agg(sum(col("cs")).as("ns"))
       val nTotal = corpus.agg(sum(col("c")).as("n"))
       bySrc.join(corpus, Seq("w"))
@@ -51,7 +51,7 @@ object Divergence {
             |  (2 * CAST(ns AS DECIMAL(38,0)) * CAST(n AS DECIMAL(38,0)))"""
             .stripMargin))
         .select(col(groupCol), col("ns").as("n_words"), col("tv_milli"))
-    }
+    })
   }
 
   def qSourceDivergence(spark: SparkSession, dir: String): DataFrame =

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 import graft.functions.TextFns
 
 /** Data Selection via Importance Resampling (DSIR-style): score every
@@ -59,13 +59,13 @@ object Dsir {
       .select(col("doc_id"), col("source"),
         (TextFns.md5u56(col("term")) % Buckets).as("b"),
         (col("source") === targetSource).as("is_target"))
-    Dedup.withCached(tokens) { t =>
+    Settle.using(tokens)(Settle.shared {
       // materialized once: the (lazy, since r17) rank scans its input
       // several times, and re-running this doc-grain aggregate shuffle
       // per scan would dominate; nd rides the rank's control plane
       // instead of a separate count pass
-      val scored = Dedup.materialized(
-        t.join(broadcast(bucketWeights(t)), Seq("b"))
+      val scored = Settle.shared(
+        tokens.join(broadcast(bucketWeights(tokens)), Seq("b"))
           .groupBy(col("doc_id"), col("source"))
           .agg(count(lit(1)).as("n_tokens"), sum(col("wgt")).as("dsir_sum"))
           .withColumn("dsir_mil",
@@ -77,7 +77,7 @@ object Dsir {
         .withColumn("selected", col("rnk") <= lit((nd + 3) / 4))
         .select(col("doc_id"), col("source"), col("n_tokens"),
           col("dsir_sum"), col("dsir_mil"), col("selected"))
-    }
+    })
   }
 
   def qDsirSelect(spark: SparkSession, dir: String): DataFrame =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Tables
+import graft.{Settle, Tables}
 import graft.functions.TextFns
 
 /** Feature hashing (the "hashing trick") — fixed-width TF-IDF document
@@ -50,10 +50,10 @@ object Features {
     // the scoring join — un-cached, the tokenize+hash+count pipeline
     // ran twice (2 of the 3 documents scans in the before plan). tf is
     // (doc_id, bucket, tf) — slim — so settle it once and tokenize once
-    // (the withCached form — persist + checkpoint of the RESULT — was
-    // measured 23% slower here: the output is doc-grain × TopSlots and
+    // (caching tf AND checkpointing the RESULT was measured 23%
+    // slower here: the output is doc-grain × TopSlots and
     // its extra materialization outweighs the saved tokenize).
-    val t = Dedup.materialized(tf)
+    val t = Settle.shared(tf)
     val df = t.groupBy(col("bucket")).agg(count(lit(1)).as("df"))
     val n1 = docs.agg(count(lit(1)).as("nn"))
     val w = Window.partitionBy(col("doc_id"))

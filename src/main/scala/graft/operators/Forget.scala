@@ -65,7 +65,13 @@ object Forget {
     * detection scan AND every per-unit rewrite job join against this
     * frame, and without the barrier each of those jobs re-derived the
     * distinct from the subject table's full lineage (a source scan +
-    * shuffle per rewritten file — pure overhead × #units). */
+    * shuffle per rewritten file — pure overhead × #units).
+    *
+    * A required barrier, so it ignores the lineage switch (ADVICE r18
+    * #4, won't fix): like every Forget pin it freezes its data BEFORE
+    * the sweep rewrites or deletes the files under it. A subject table
+    * read from the swept tree itself would, unpinned, be re-read
+    * mid-sweep from files already rewritten or renamed away. */
   private def settledKeys(keysDf: DataFrame, keyCol: String): DataFrame =
     keysDf.select(col(keyCol)).distinct().localCheckpoint(true)
 
@@ -350,30 +356,9 @@ object Forget {
     forgetPackedTotals(spark, path, keysDf)._1
 
   /** [[forgetPacked]] plus (rows_total_before, rows_removed_total) for
-    * the compliance report — the [[forgetKeysFilesTotals]] contract.
-    * The public erasure entry point cannot express the unconstrained
-    * (pack-straddling) writer: that path lives only on the
-    * `private[graft]` probe overload below (ADVICE r15 — a default
-    * parameter on a compliance API is one call-site typo away from the
-    * r13 corruption). */
+    * the compliance report — the [[forgetKeysFilesTotals]] contract. */
   def forgetPackedTotals(spark: SparkSession, path: String,
-      keysDf: DataFrame): (DataFrame, Long, Long) =
-    forgetPackedTotalsImpl(spark, path, keysDf,
-      probeUnsafeUnconstrainedWrite = false)
-
-  /** Probe-only overload: `graft.Probe packrewrite`'s cost attribution
-    * (whole-dir sweep with vs without the layout-preserving range
-    * partition). The unconstrained writer reintroduces the
-    * pack-straddle corruption ADVICE r13 flagged, so it is sealed
-    * inside the package — nothing outside the probe may reach it. */
-  private[graft] def forgetPackedTotalsProbe(spark: SparkSession,
-      path: String, keysDf: DataFrame,
-      unconstrainedWrite: Boolean): (DataFrame, Long, Long) =
-    forgetPackedTotalsImpl(spark, path, keysDf, unconstrainedWrite)
-
-  private def forgetPackedTotalsImpl(spark: SparkSession, path: String,
-      keysDf: DataFrame,
-      probeUnsafeUnconstrainedWrite: Boolean): (DataFrame, Long, Long) = {
+      keysDf: DataFrame): (DataFrame, Long, Long) = {
     import org.apache.spark.sql.expressions.Window
     def packClose(df: DataFrame, keys: DataFrame, keyCol: String): DataFrame = {
       val marked = df.join(keys.withColumn("_graft_hit", lit(1L)),
@@ -396,12 +381,9 @@ object Forget {
     // straddle files and the NEXT sweep's per-file closure would shift
     // only the half that holds a subject row (ADVICE r13, medium)
     def packedWriter(df: DataFrame, staging: String, nFiles: Int): Unit =
-      if (probeUnsafeUnconstrainedWrite)
-        df.write.mode("overwrite").parquet(staging)
-      else
-        df.repartitionByRange(nFiles, col("shard"), col("pack_id"))
-          .sortWithinPartitions(col("shard"), col("pack_id"), col("doc_id"))
-          .write.mode("overwrite").parquet(staging)
+      df.repartitionByRange(nFiles, col("shard"), col("pack_id"))
+        .sortWithinPartitions(col("shard"), col("pack_id"), col("doc_id"))
+        .write.mode("overwrite").parquet(staging)
     forgetKeysFilesTotals(spark, path, "doc_id", keysDf, packClose,
       packedWriter)
   }

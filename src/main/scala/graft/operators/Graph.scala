@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 
 /** Iterative link-analysis over a relationship graph — PageRank in exact
   * fixed-point arithmetic, the reputation/centrality primitive a
@@ -62,7 +62,7 @@ object Graph {
     // the symmetric edge set (checkpointing the UNION here instead was
     // measured 15-50% SLOWER at sf0.1 — it double-materializes under
     // pagerank/bfs, which re-pin edges for their iterations).
-    val p = Dedup.materialized(pairs)
+    val p = Settle.shared(pairs)
     p.select(col("cust").as("src"), col("supp").as("dst"))
       .union(p.select(col("supp").as("src"), col("cust").as("dst")))
   }
@@ -88,9 +88,10 @@ object Graph {
     * two plans are result-identical because the arithmetic is integer
     * fixed-point either way. */
   def pageRank(edges: DataFrame, iterations: Int = Iterations,
-      broadcastRanks: Option[Boolean] = None): DataFrame = {
-    val cached = edges.cache()
-    val deg = cached.groupBy(col("src").as("node"))
+      broadcastRanks: Option[Boolean] = None): DataFrame = Settle.using(edges) {
+    // every round checkpoints eagerly, so nothing returned re-reads the
+    // cached edges once the scope releases them
+    val deg = edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("outdeg"))
     // one control-plane scalar per call: drives both init_fp and the
     // join-strategy dial
@@ -98,42 +99,44 @@ object Graph {
     // empty edge set: lit(Scale / nNodes) below would divide by zero at
     // plan-BUILD time (ADVICE r9); return the (empty) ranks frame instead
     if (nNodes == 0L)
-      return deg.select(col("node"), col("outdeg"), lit(0L).as("rank_fp"))
-    val useBroadcast = broadcastRanks.getOrElse(nNodes <= BroadcastNodeCap)
-    // shuffle mode pays one up-front edge shuffle; localCheckpoint
-    // materializes it WITH its HashPartitioning(src) preserved, so every
-    // round's join reuses the layout and moves only rank rows
-    val roundEdges =
-      if (useBroadcast) cached
-      else cached.repartition(col("src")).localCheckpoint(true)
-    var ranks = deg
-      .withColumn("init_fp", lit(Scale / nNodes))
-      .select(col("node"), col("outdeg"), col("init_fp"),
-        col("init_fp").as("rank_fp"))
-    for (_ <- 1 to iterations) {
-      val share = ranks.select(col("node").as("src"),
-        expr("rank_fp div outdeg").as("share"))
-      // broadcast: the edge table never shuffles (the carried checkpoint
-      // statistics otherwise overestimate ranks into a sort-merge join).
-      // shuffle: hint shuffle_hash so neither AQE nor stats re-broadcast
-      // the rank side — the point is an #edges-stationary plan.
-      val inflow = roundEdges
-        .join(if (useBroadcast) broadcast(share) else share.hint("shuffle_hash"),
-          Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("share")).as("inflow"))
-      ranks = ranks.drop("rank_fp")
-        .join(inflow, Seq("node"), "left")
-        .withColumn("rank_fp",
-          expr(s"((${DampDen - DampNum} * init_fp) + ($DampNum * coalesce(inflow, 0L))) div $DampDen"))
-        .drop("inflow")
-        // each round's ranks feed the next round TWICE (share source +
-        // blend base); without a materialization barrier the lineage
-        // re-executes shared subtrees 2^k times (measured 7.0 -> ~2.5 s
-        // at 3 rounds, and unbounded growth with depth)
-        .localCheckpoint(true)
+      deg.select(col("node"), col("outdeg"), lit(0L).as("rank_fp"))
+    else {
+      val useBroadcast = broadcastRanks.getOrElse(nNodes <= BroadcastNodeCap)
+      // shuffle mode pays one up-front edge shuffle; localCheckpoint
+      // materializes it WITH its HashPartitioning(src) preserved, so every
+      // round's join reuses the layout and moves only rank rows
+      val roundEdges =
+        if (useBroadcast) edges
+        else edges.repartition(col("src")).localCheckpoint(true)
+      var ranks = deg
+        .withColumn("init_fp", lit(Scale / nNodes))
+        .select(col("node"), col("outdeg"), col("init_fp"),
+          col("init_fp").as("rank_fp"))
+      for (_ <- 1 to iterations) {
+        val share = ranks.select(col("node").as("src"),
+          expr("rank_fp div outdeg").as("share"))
+        // broadcast: the edge table never shuffles (the carried checkpoint
+        // statistics otherwise overestimate ranks into a sort-merge join).
+        // shuffle: hint shuffle_hash so neither AQE nor stats re-broadcast
+        // the rank side — the point is an #edges-stationary plan.
+        val inflow = roundEdges
+          .join(if (useBroadcast) broadcast(share) else share.hint("shuffle_hash"),
+            Seq("src"))
+          .groupBy(col("dst").as("node"))
+          .agg(sum(col("share")).as("inflow"))
+        ranks = ranks.drop("rank_fp")
+          .join(inflow, Seq("node"), "left")
+          .withColumn("rank_fp",
+            expr(s"((${DampDen - DampNum} * init_fp) + ($DampNum * coalesce(inflow, 0L))) div $DampDen"))
+          .drop("inflow")
+          // each round's ranks feed the next round TWICE (share source +
+          // blend base); without a materialization barrier the lineage
+          // re-executes shared subtrees 2^k times (measured 7.0 -> ~2.5 s
+          // at 3 rounds, and unbounded growth with depth)
+          .localCheckpoint(true)
+      }
+      ranks.select(col("node"), col("outdeg"), col("rank_fp"))
     }
-    ranks.select(col("node"), col("outdeg"), col("rank_fp"))
   }
 
   /** One PageRank iteration body, pre-checkpoint — factored out so the
@@ -268,7 +271,7 @@ object Graph {
     // re-running the facts join + distinct under BOTH self-join legs
     // (2 scans of both facts in the before plan); the pair join and its
     // distinct stay lazy for the consumer's own cache.
-    val c = Dedup.materialized(cp)
+    val c = Settle.shared(cp)
     c.as("a").join(c.as("b"),
         col("a.p") === col("b.p") && col("a.s") === col("b.s")
           && col("a.c") < col("b.c"))
@@ -283,9 +286,8 @@ object Graph {
     * skew (id-ordered wedges blow up quadratically on a high-degree,
     * low-id node; counts are identical either way, so the oracle twin
     * uses the simple id order). Three joins, all on node keys; no n³. */
-  def triangleCounts(undirected: DataFrame): DataFrame = {
-    val edges = undirected.cache()
-    val both = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
+  def triangleCounts(undirected: DataFrame): DataFrame = Settle.using(undirected) {
+    val both = undirected.union(undirected.select(col("v").as("u"), col("u").as("v")))
     val deg = both.groupBy(col("u").as("node")).agg(count(lit(1)).as("degree"))
     // total-order rank: degree-major, id-minor, as a STRUCT comparison —
     // structs order lexicographically in Spark, so the order is correct
@@ -299,19 +301,21 @@ object Graph {
       .join(rk.select(col("node").as("v"), col("rank").as("rv")), Seq("v"))
       .filter(col("ru") < col("rv"))
       .select(col("u").as("src"), col("v").as("dst"), col("rv"))
-      .cache()
-    val tris = oriented.as("e1")
-      .join(oriented.as("e2"),
-        col("e1.src") === col("e2.src") && col("e1.rv") < col("e2.rv"))
-      .select(col("e1.src").as("a"), col("e1.dst").as("b"), col("e2.dst").as("c"))
-      .join(oriented.as("e3").select(col("src").as("b"), col("dst").as("c")),
-        Seq("b", "c"), "left_semi")
-    val roles = tris.select(col("a").as("node"))
-      .union(tris.select(col("b").as("node")))
-      .union(tris.select(col("c").as("node")))
-    roles.groupBy(col("node")).agg(count(lit(1)).as("triangles"))
-      .join(deg, Seq("node"))
-      .select(col("node"), col("degree"), col("triangles"))
+    // the node-grain counts settle while both caches are live
+    Settle.using(oriented)(Settle.shared {
+      val tris = oriented.as("e1")
+        .join(oriented.as("e2"),
+          col("e1.src") === col("e2.src") && col("e1.rv") < col("e2.rv"))
+        .select(col("e1.src").as("a"), col("e1.dst").as("b"), col("e2.dst").as("c"))
+        .join(oriented.as("e3").select(col("src").as("b"), col("dst").as("c")),
+          Seq("b", "c"), "left_semi")
+      val roles = tris.select(col("a").as("node"))
+        .union(tris.select(col("b").as("node")))
+        .union(tris.select(col("c").as("node")))
+      roles.groupBy(col("node")).agg(count(lit(1)).as("triangles"))
+        .join(deg, Seq("node"))
+        .select(col("node"), col("degree"), col("triangles"))
+    })
   }
 
   private def trianglesTop(undirected: DataFrame): DataFrame =
@@ -365,24 +369,24 @@ object Graph {
     * per-level checkpoints keep lineage (and carried size statistics)
     * flat, the [[pageRank]] lesson. Depth is a small constant: reach
     * analyses ask "within k hops", not full shortest paths. */
-  def bfsHops(edges: DataFrame, sources: DataFrame, maxHops: Int): DataFrame = {
-    val cached = edges.cache()
-    var settled = sources.select(col("node")).distinct()
-      .withColumn("hop", lit(0)).localCheckpoint(true)
-    var frontier = settled.select(col("node"))
-    for (h <- 1 to maxHops) {
-      val next = cached
-        .join(broadcast(frontier.withColumnRenamed("node", "src")), Seq("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(settled, Seq("node"), "left_anti")
-        .withColumn("hop", lit(h)).localCheckpoint(true)
-      // settled is a union of already-checkpointed levels — re-reading
-      // it is a cached-block scan, so no checkpoint (and no extra job)
-      settled = settled.union(next)
-      frontier = next.select(col("node"))
+  def bfsHops(edges: DataFrame, sources: DataFrame, maxHops: Int): DataFrame =
+    Settle.using(edges) {
+      var settled = sources.select(col("node")).distinct()
+        .withColumn("hop", lit(0)).localCheckpoint(true)
+      var frontier = settled.select(col("node"))
+      for (h <- 1 to maxHops) {
+        val next = edges
+          .join(broadcast(frontier.withColumnRenamed("node", "src")), Seq("src"))
+          .select(col("dst").as("node")).distinct()
+          .join(settled, Seq("node"), "left_anti")
+          .withColumn("hop", lit(h)).localCheckpoint(true)
+        // settled is a union of already-checkpointed levels — re-reading
+        // it is a cached-block scan, so no checkpoint (and no extra job)
+        settled = settled.union(next)
+        frontier = next.select(col("node"))
+      }
+      settled
     }
-    settled
-  }
 
   /** Reach histogram of the purchase graph from one nation's suppliers:
     * how much of the customer/supplier universe lies within k hops
@@ -390,9 +394,10 @@ object Graph {
   val BfsMaxHops = 4
   val BfsSourceNation = 0
 
-  private def bfsReachHistogram(edgesIn: DataFrame,
-      supplier: DataFrame): DataFrame = {
-    val edges = edgesIn.cache()
+  private def bfsReachHistogram(edges: DataFrame,
+      supplier: DataFrame): DataFrame = Settle.using(edges) {
+    // the BFS rounds read the cached edges; the final histogram re-reads
+    // them from source once, after the scope releases them
     val sources = supplier
       .filter(col("s_nationkey") === BfsSourceNation)
       .select((col("s_suppkey") * 2 + 1).as("node"))
@@ -673,13 +678,11 @@ object Graph {
     * DuckDB twin after any iteration count. */
   def hits(edges: DataFrame, iterations: Int = HitsIterations,
       broadcastScores: Boolean = false): DataFrame = {
-    val cached = edges.cache()
     // scope the cache to the run: every half-step localCheckpoints
     // eagerly, so by return nothing downstream re-reads the cached
-    // edges — an unscoped cache() would accumulate blocks for the
+    // edges — an unscoped cache would accumulate blocks for the
     // SparkSession lifetime across repeated invocations (ADVICE r14)
-    try hitsOn(cached, cached, iterations, broadcastScores)
-    finally cached.unpersist(false)
+    Settle.using(edges)(hitsOn(edges, edges, iterations, broadcastScores))
   }
 
   /** One HITS half-step's edge join + mass aggregate, pre-checkpoint —
@@ -795,7 +798,7 @@ object Graph {
         bucketedDirectedNodes = stats.getLong(1)
         // bucket count is a CAPACITY parameter — a scan's parallelism IS
         // its bucket count (measured: 8 buckets lose to a plain scan
-        // past ~10M edges on 32 cores, `Probe hitsscale`), but
+        // past ~10M edges on 32 cores, SCALE.md), but
         // over-bucketing a small table costs pure scheduling overhead
         // (32 tiny tasks × 6 half-steps measured 1.5× on the sf0.1
         // serving gate). Size by DATA — ~1M edges per bucket — with an

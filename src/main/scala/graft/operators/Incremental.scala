@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 import graft.functions.TextFns
 
 /** Incremental (cross-snapshot) deduplication: admit a NEW batch of
@@ -50,36 +50,37 @@ object IncrementalDedup {
 
   /** (doc_id, status) for every batch doc: exact_dup / near_dup / kept. */
   def incrementalDedup(existing: DataFrame, batch: DataFrame,
-      threshold: Double = 0.8): DataFrame =
-    Dedup.withCached(Dedup.shingled(existing)) { exSh =>
-      Dedup.withCached(Dedup.shingled(batch)) { bSh =>
-        val exactHit = batch
-          .select(col("doc_id"), md5(col("text")).as("digest"))
-          .join(existing.select(md5(col("text")).as("digest")).distinct(),
-            Seq("digest"), "left_semi")
-          .select(col("doc_id"))
-        val cands = bandKeys(bSh)
-          .join(bandKeys(exSh)
-            .select(col("doc_id").as("ex_doc"), col("band"), col("bh")),
-            Seq("band", "bh"))
-          .select(col("doc_id"), col("ex_doc")).distinct()
-        val nearHit = cands
-          .join(bSh.select(col("doc_id"), col("shingles").as("sh_b"), col("n_sh").as("n_b")),
-            Seq("doc_id"))
-          .join(exSh.select(col("doc_id").as("ex_doc"), col("shingles").as("sh_e"),
-            col("n_sh").as("n_e")), Seq("ex_doc"))
-          .withColumn("inter", size(array_intersect(col("sh_b"), col("sh_e"))))
-          .filter(col("inter") / (col("n_b") + col("n_e") - col("inter")) >= threshold)
-          .select(col("doc_id")).distinct()
-        batch.select(col("doc_id"))
-          .join(exactHit.withColumn("is_exact", lit(true)), Seq("doc_id"), "left")
-          .join(nearHit.withColumn("is_near", lit(true)), Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            when(col("is_exact"), "exact_dup")
-              .when(col("is_near"), "near_dup")
-              .otherwise("kept").as("status"))
-      }
-    }
+      threshold: Double = 0.8): DataFrame = {
+    val exSh = Dedup.shingled(existing)
+    val bSh = Dedup.shingled(batch)
+    Settle.using(exSh, bSh)(Settle.shared {
+      val exactHit = batch
+        .select(col("doc_id"), md5(col("text")).as("digest"))
+        .join(existing.select(md5(col("text")).as("digest")).distinct(),
+          Seq("digest"), "left_semi")
+        .select(col("doc_id"))
+      val cands = bandKeys(bSh)
+        .join(bandKeys(exSh)
+          .select(col("doc_id").as("ex_doc"), col("band"), col("bh")),
+          Seq("band", "bh"))
+        .select(col("doc_id"), col("ex_doc")).distinct()
+      val nearHit = cands
+        .join(bSh.select(col("doc_id"), col("shingles").as("sh_b"), col("n_sh").as("n_b")),
+          Seq("doc_id"))
+        .join(exSh.select(col("doc_id").as("ex_doc"), col("shingles").as("sh_e"),
+          col("n_sh").as("n_e")), Seq("ex_doc"))
+        .withColumn("inter", size(array_intersect(col("sh_b"), col("sh_e"))))
+        .filter(col("inter") / (col("n_b") + col("n_e") - col("inter")) >= threshold)
+        .select(col("doc_id")).distinct()
+      batch.select(col("doc_id"))
+        .join(exactHit.withColumn("is_exact", lit(true)), Seq("doc_id"), "left")
+        .join(nearHit.withColumn("is_near", lit(true)), Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          when(col("is_exact"), "exact_dup")
+            .when(col("is_near"), "near_dup")
+            .otherwise("kept").as("status"))
+    })
+  }
 
   /** Query instance: existing corpus = the deterministic train split,
     * incoming batch = the val/test remainder (TextAnalysis.withSplit's

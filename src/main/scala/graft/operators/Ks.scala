@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 
 /** Two-sample Kolmogorov–Smirnov distance — the distribution-shift
   * test behind "did this feature drift between cohorts/segments":
@@ -44,10 +44,10 @@ object Ks {
       .agg(sum(col("ia")).as("ca"), sum(lit(1L) - col("ia")).as("cb"))
       .repartitionByRange(nPartitions, col("v"))
       .withColumn("_pid", spark_partition_id())
-    Dedup.withCached(lv) { s =>
+    Settle.using(lv)(Settle.shared {
       val spark = df.sparkSession
       import spark.implicits._
-      val stats = s.groupBy(col("_pid"))
+      val stats = lv.groupBy(col("_pid"))
         .agg(sum(col("ca")).as("sa"), sum(col("cb")).as("sb"))
         .collect().map(r => (r.getInt(0), (r.getLong(1), r.getLong(2))))
         .sortBy(_._1)
@@ -61,7 +61,7 @@ object Ks {
         }.map { case (pid, (pa, pb)) => (pid, pa, pb) }
       val w = Window.partitionBy(col("_pid")).orderBy(col("v"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      s.join(broadcast(offsets.toDF("_pid", "_offa", "_offb")), Seq("_pid"))
+      lv.join(broadcast(offsets.toDF("_pid", "_offa", "_offb")), Seq("_pid"))
         .withColumn("cum_a", sum(col("ca")).over(w) + col("_offa"))
         .withColumn("cum_b", sum(col("cb")).over(w) + col("_offb"))
         .agg(max(abs(col("cum_a") * nb - col("cum_b") * na)).as("d_num"))
@@ -78,7 +78,7 @@ object Ks {
           (col("d_num").cast("decimal(38,0)") * col("d_num") * lit(1000000L)
             > lit(C2Micro).cast("decimal(38,0)") * lit(na + nb) * lit(na) * lit(nb))
             .cast("int").as("reject_05"))
-    }
+    })
   }
 
   /** KS between click and purchase event-value distributions. */
@@ -115,10 +115,10 @@ object Ks {
       .agg(sum(col("ia")).as("ca"), sum(lit(1L) - col("ia")).as("cb"))
       .repartitionByRange(nPartitions, col("v"))
       .withColumn("_pid", spark_partition_id())
-    Dedup.withCached(lv) { s =>
+    Settle.using(lv)(Settle.shared {
       val spark = df.sparkSession
       import spark.implicits._
-      val stats = s.groupBy(col("_pid"))
+      val stats = lv.groupBy(col("_pid"))
         .agg(sum(col("ca")).as("sa"), sum(col("cb")).as("sb"))
         .collect().map(r => (r.getInt(0), (r.getLong(1), r.getLong(2))))
         .sortBy(_._1)
@@ -130,7 +130,7 @@ object Ks {
         }
       val w = Window.partitionBy(col("_pid")).orderBy(col("v"))
         .rowsBetween(Window.unboundedPreceding, -1)
-      s.join(broadcast(offsets.toDF("_pid", "_off")), Seq("_pid"))
+      lv.join(broadcast(offsets.toDF("_pid", "_off")), Seq("_pid"))
         .withColumn("before",
           coalesce(sum(col("ca") + col("cb")).over(w), lit(0L)) + col("_off"))
         .agg(sum(col("ca") *
@@ -145,7 +145,7 @@ object Ks {
           if (na == 0L || nb == 0L) lit(null).cast("bigint")
           else expr(s"cast((cast(u1_x2 as decimal(38,0)) * 500000)" +
             s" div (cast(${na}L as decimal(38,0)) * ${nb}L) as bigint)"))
-    }
+    })
   }
 
   def qMwuValueByType(spark: SparkSession, dir: String): DataFrame =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 
 /** Watermark-lateness profile — the design input for every streaming
   * watermark choice: replay history in ARRIVAL order (event_id is the
@@ -34,7 +34,7 @@ object Lateness {
       .select(col("event_id"), col("ts").cast("long").as("tsec"))
       .repartitionByRange(nPartitions, col("event_id"))
       .withColumn("_pid", spark_partition_id())
-    Dedup.withCached(slim) { s =>
+    Settle.using(slim)(Settle.shared {
       val spark = events.sparkSession
       import spark.implicits._
       // ONE control-plane pass carries both per-partition maxima (the
@@ -44,7 +44,7 @@ object Lateness {
       // only null-ts rows has a NULL max — carried as None, it
       // contributes nothing to the prefix instead of NPE-ing the
       // driver read
-      val stats = s.groupBy(col("_pid"))
+      val stats = slim.groupBy(col("_pid"))
         .agg(max(col("tsec")).as("m"), count(lit(1)).as("c"))
         .collect().map(r => (r.getInt(0),
           (if (r.isNullAt(1)) None else Some(r.getLong(1)), r.getLong(2))))
@@ -59,7 +59,7 @@ object Lateness {
         }
       val w = Window.partitionBy(col("_pid")).orderBy(col("event_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      s.join(broadcast(offsets.toDF("_pid", "_off")), Seq("_pid"))
+      slim.join(broadcast(offsets.toDF("_pid", "_off")), Seq("_pid"))
         // greatest() skips the null first-partition offset; the local
         // window is inclusive, so hwm is never null
         .withColumn("hwm", greatest(max(col("tsec")).over(w), col("_off")))
@@ -74,7 +74,7 @@ object Lateness {
         .agg(count(lit(1)).as("n"), max(col("late_s")).as("max_late_s"))
         .withColumn("share_milli", expr(s"(n * 1000) div ${nn}L"))
         .select(col("bucket"), col("n"), col("max_late_s"), col("share_milli"))
-    }
+    })
   }
 
   def qLatenessProfile(spark: SparkSession, dir: String): DataFrame =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 
 /** Revenue-over-time serving rollups: the cohort LTV triangle and
   * period-over-period deltas.
@@ -21,7 +21,7 @@ object Ltv {
     // r17: the first-order cohort table feeds both the cell join and
     // the cohort-size rollup — un-cached, the orders scan + customer-
     // grain aggregate ran twice (3 orders scans in the before plan).
-    val firsts = Dedup.materialized(orders.groupBy(col("o_custkey"))
+    val firsts = Settle.shared(orders.groupBy(col("o_custkey"))
       .agg(year(min(col("o_orderdate"))).as("cohort_year")))
     val cells = orders
       .select(col("o_custkey"), year(col("o_orderdate")).as("order_year"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 
 /** Matryoshka-style prefix-dimension retrieval evaluation: how much of
   * the full 64-dim cosine top-k survives when queries rank by only the
@@ -58,10 +58,10 @@ object Matryoshka {
     * recall in basis points. */
   def prefixRecall(emb: DataFrame): DataFrame = {
     val full = topKPrefix(emb, 64)
-    Dedup.withCached(full) { f =>
+    Settle.using(full)(Settle.shared {
       Prefixes.map { d =>
         topKPrefix(emb, d).as("p")
-          .join(f.as("g"),
+          .join(full.as("g"),
             col("p.query_id") === col("g.query_id") &&
               col("p.neighbor_id") === col("g.neighbor_id"))
           .agg(count(lit(1)).as("hits"))
@@ -69,7 +69,7 @@ object Matryoshka {
             lit(NQueries.toLong * K).as("possible"),
             expr(s"(hits * 10000) div ${NQueries.toLong * K}").as("recall_bp"))
       }.reduce(_ unionAll _).orderBy(col("prefix_dims"))
-    }
+    })
   }
 
   def qPrefixRecall(spark: SparkSession, dir: String): DataFrame =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 
 /** Pattern mining over the event stream: per-group exact distribution
   * profiles (boxplot five-number summaries) and market-basket
@@ -92,13 +92,13 @@ object Mining {
   def assocRules(events: DataFrame, minSupport: Int = MinSupport): DataFrame = {
     val basket0 = events.select(col("user_id"),
       to_date(col("ts")).as("day"), col("event_type")).distinct()
-    Dedup.withCached(basket0) { basket =>
-      val nb = basket.select(col("user_id"), col("day")).distinct()
+    Settle.using(basket0)(Settle.shared {
+      val nb = basket0.select(col("user_id"), col("day")).distinct()
         .agg(count(lit(1)).as("n_baskets"))
-      val typeCounts = basket.groupBy(col("event_type"))
+      val typeCounts = basket0.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_t"))
-      val pairs = basket.as("a")
-        .join(basket.as("b"),
+      val pairs = basket0.as("a")
+        .join(basket0.as("b"),
           col("a.user_id") === col("b.user_id") && col("a.day") === col("b.day") &&
             col("a.event_type") =!= col("b.event_type"))
         .groupBy(col("a.event_type").as("antecedent"),
@@ -118,7 +118,7 @@ object Mining {
             (col("n_a") * col("n_b"))).cast("long"))
         .select(col("antecedent"), col("consequent"), col("n_ab"),
           col("n_a"), col("n_b"), col("confidence_milli"), col("lift_milli"))
-    }
+    })
   }
 
   def qAssocRules(spark: SparkSession, dir: String): DataFrame =

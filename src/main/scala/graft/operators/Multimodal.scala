@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 
 /** Multimodal column plumbing: media payloads as opaque binary columns
   * with typed metadata, processed in partition-sized batches.
@@ -704,8 +704,8 @@ object Multimodal {
     * that survives a dup-heavy crawl. Payloads never join. */
   def ahashPairs(docs: DataFrame): DataFrame = {
     val h = ahashes(docs)
-    Dedup.withCached(h) { hh =>
-      val m = hh.select(col("doc_id"), col("ahash_lo").as("lo"),
+    Settle.using(h)(Settle.shared {
+      val m = h.select(col("doc_id"), col("ahash_lo").as("lo"),
         col("ahash_hi").as("hi"))
       val within = m.as("a")
         .join(m.as("b"), col("a.lo") === col("b.lo") &&
@@ -742,7 +742,7 @@ object Multimodal {
         .select(least(col("da"), col("db")).as("doc_a"),
           greatest(col("da"), col("db")).as("doc_b"), col("hamming"))
       within.unionByName(cross)
-    }
+    })
   }
 
   def qMultimodalAhashPairs(spark: SparkSession, dir: String): DataFrame =

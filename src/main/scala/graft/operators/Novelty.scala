@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 
 /** Per-document novelty against the settled (train) corpus: the share of
   * a document's 3-gram shingles never seen in ANY train-split document,
@@ -39,8 +39,9 @@ object Novelty {
     // the tokenize+shingle pipeline ran three times (6 documents scans
     // in the before plan). One cached pass, same discipline as
     // shingleJaccardPairs.
-    Dedup.withCached(Dedup.shingled(tagged.select(col("doc_id"), col("text")))
-      .join(tagged.select(col("doc_id"), col("split")), Seq("doc_id"))) { sh =>
+    val sh = Dedup.shingled(tagged.select(col("doc_id"), col("text")))
+      .join(tagged.select(col("doc_id"), col("split")), Seq("doc_id"))
+    Settle.using(sh)(Settle.shared {
     val trainVocab = sh.filter(col("split") === "train")
       .select(explode_outer(col("shingles")).as("sh"))
       .filter(col("sh").isNotNull).distinct()
@@ -62,7 +63,7 @@ object Novelty {
         expr("(novel_shingles * 10000) div n_sh"))
       .select(col("doc_id"), col("split"), col("n_sh").cast("long").as("n_sh"),
         col("novel_shingles"), col("novelty_bp"))
-    }
+    })
   }
 
   def qNoveltyVsTrain(spark: SparkSession, dir: String): DataFrame =

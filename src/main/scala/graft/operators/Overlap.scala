@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 import graft.functions.TextFns
 
 /** Corpus-level overlap estimation between two document sets (train vs
@@ -86,8 +86,8 @@ object Overlap {
       .withColumn("is_train", col("split") === "train")
     val sh = sideShingles(tagged,
       when(col("is_train"), "train").otherwise("heldout"))
-    Dedup.withCached(sh) { shc =>
-      val sigs = sigBySide(shc)
+    Settle.using(sh)(Settle.shared {
+      val sigs = sigBySide(sh)
       val train = sigs.filter(col("side") === "train").drop("side").as("a")
       val held = sigs.filter(col("side") === "heldout").drop("side").as("b")
       val matched = (0 until NFuncs)
@@ -96,7 +96,7 @@ object Overlap {
       val est = train.crossJoin(held)
         .select(matched.as("matched"),
           (matched.cast("double") / NFuncs.toDouble).as("est_jaccard"))
-      val exact = shc
+      val exact = sh
         .groupBy(col("sh"))
         .agg(max(when(col("side") === "train", 1).otherwise(0)).as("in_train"),
           max(when(col("side") === "heldout", 1).otherwise(0)).as("in_held"))
@@ -111,7 +111,7 @@ object Overlap {
         .select(lit(NFuncs.toLong).as("n_funcs"), col("matched"),
           col("est_jaccard"), col("inter"), col("union_ct"),
           col("exact_jaccard"))
-    }
+    })
   }
 
   def qOverlapEstimate(spark: SparkSession, dir: String): DataFrame =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 import graft.functions.TextFns
 
 /** Quality-threshold selection curve — the model-score analog of
@@ -37,12 +37,12 @@ object QualityCurve {
         when(length(col("s")) >= 3, sequence(lit(1), length(col("s")) - 2))
           .otherwise(array())).as("i"))
       .select(col("doc_id"), col("s").substr(col("i"), lit(3)).as("tri"))
-    Dedup.withCached(tris) { t =>
-      val vocab = t.groupBy(col("tri"))
+    Settle.using(tris)(Settle.shared {
+      val vocab = tris.groupBy(col("tri"))
         .agg(count(lit(1)).as("cnt"))
         .select(col("tri"),
           graft.functions.TextFns.log2Floor(col("cnt")).cast("long").as("bucket"))
-      val perDoc = t.join(broadcast(vocab), Seq("tri"))
+      val perDoc = tris.join(broadcast(vocab), Seq("tri"))
         .groupBy(col("doc_id"))
         .agg(sum(col("bucket")).as("sb"), count(lit(1)).as("nt"))
         .withColumn("score_milli", expr("sb * 1000 div nt"))
@@ -61,7 +61,7 @@ object QualityCurve {
         .select(col("band"), (col("band") * BandMilli).as("threshold_milli"),
           col("n_docs"), col("n_tokens"), col("docs_kept"),
           col("tokens_kept"))
-    }
+    })
   }
 
   def qLmScoreCurve(spark: SparkSession, dir: String): DataFrame =

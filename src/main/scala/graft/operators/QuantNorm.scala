@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 
 /** Quantile normalization across sources — map every source's value
   * distribution onto the GLOBAL distribution so per-source scale and
@@ -41,13 +41,11 @@ object QuantNorm {
     // releases it. g is the shared frame every later leg reads (dial
     // sample, within-source rank, rank-selection lookup); nn rides the
     // rank's control plane instead of a separate count job.
-    base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (g, nn) =
-      try {
-        val (g0, n0) = Scale.globalRankWithTotal(base,
-          Seq(col("n_chars"), col("doc_id")), "g_rank", 32)
-        (Dedup.materialized(g0), n0)
-      } finally base.unpersist(false)
+    val (g, nn) = Settle.using(base) {
+      val (g0, n0) = Scale.globalRankWithTotal(base,
+        Seq(col("n_chars"), col("doc_id")), "g_rank", 32)
+      (Settle.shared(g0), n0)
+    }
     val hot = hotGroupsOverride.getOrElse(Scale.hotGroups(g, Seq("source")))
     val ranked = if (hot) {
       // source sizes ride the collected offsets — no extra agg pass

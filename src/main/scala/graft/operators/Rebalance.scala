@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 import graft.functions.TextFns
 
 /** Distribution rebalancing for training mixtures — the two standard
@@ -139,8 +139,8 @@ object Rebalance {
     import spark.implicits._
     val slim = docs.select(col("doc_id"), col(groupCol),
       TextFns.tokenCount(col("text")).cast("long").as("token_count"))
-    Dedup.withCached(slim) { s =>
-      val totals = s.groupBy(col(groupCol))
+    Settle.using(slim)(Settle.shared {
+      val totals = slim.groupBy(col(groupCol))
         .agg(sum(col("token_count")).as("n")).collect()
         .map(r => groupKeyOf(r) -> r.getLong(1)).toSeq
       val quotas = temperatureQuotas(totals, targetTokens)
@@ -148,14 +148,14 @@ object Rebalance {
         quotas.toDF("_graft_g", "group_tokens", "token_quota"))
       val order = Seq(TextFns.md5u56(col("doc_id").cast("string")),
         col("doc_id"))
-      val hot = hotGroupsOverride.getOrElse(Scale.hotGroups(s, Seq(groupCol)))
+      val hot = hotGroupsOverride.getOrElse(Scale.hotGroups(slim, Seq(groupCol)))
       val cum =
-        if (hot) Scale.groupedRunningSum(s, Seq(groupCol), order,
+        if (hot) Scale.groupedRunningSum(slim, Seq(groupCol), order,
           col("token_count"), "cum_tok")
         else {
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col(groupCol)).orderBy(order: _*)
-          s.withColumn("cum_tok", sum(col("token_count")).over(w).cast("long"))
+          slim.withColumn("cum_tok", sum(col("token_count")).over(w).cast("long"))
         }
       val cum2 = cum.withColumn("start_tok",
         col("cum_tok") - col("token_count"))
@@ -163,7 +163,7 @@ object Rebalance {
         .filter(col("start_tok") < col("token_quota"))
         .select(col("doc_id"), col(groupCol), col("token_count"),
           col("start_tok"), col("group_tokens"), col("token_quota"))
-    }
+    })
   }
 
   def qMixTemperatureTokens(spark: SparkSession, dir: String): DataFrame =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 
 /** Item-to-item co-occurrence similarity — the "customers also bought"
   * recommender primitive over order baskets, complementing
@@ -44,7 +44,7 @@ object Reco {
     // distinct + one count aggregate; at 100 TB `items` is basket-grain
     // (≤ rows) and `counts` item-grain (≪ rows), both MEMORY_AND_DISK
     // so an overflow spills instead of OOMing.
-    Dedup.withCachedAll(items, counts) {
+    Settle.using(items, counts)(Settle.shared {
       // r18: one grouped shuffle by basket + in-basket ordered pairs
       // (both orientations, a ≠ b) replaces the self-join's two
       // exchanges of the incidence table; baskets are items-per-order
@@ -71,7 +71,7 @@ object Reco {
         .filter(col("rnk") <= k)
         .select(col("part"), col("other"), col("n_co"), col("n_a"), col("n_b"),
           col("cos2_milli"), col("rnk"))
-    }
+    })
   }
 
   def qItemSimilarity(spark: SparkSession, dir: String): DataFrame =

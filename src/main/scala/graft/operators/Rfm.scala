@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 
 /** RFM (recency / frequency / monetary) customer segmentation — the
   * serving-layer scoring table every BI stack derives from an orders
@@ -111,7 +111,7 @@ object Rfm {
     * threading the full frame through the three chained globalRanks
     * materialized the GROWING frame six times (each rank's internal
     * persist + checkpoint), which turned storage-bound at the 38M
-    * tier (`Probe ungroupedscale`, r16) — the slim form materializes
+    * tier (SCALE.md r16) — the slim form materializes
     * ~16 B/row per rank instead, and the join-back is three
     * co-keyed hash joins at entity grain. */
   private def scalableOn(b: DataFrame, n: Long, nPartitions: Int): DataFrame = {
@@ -132,8 +132,10 @@ object Rfm {
 
   /** [[rfm]] with the distributed form forced at an explicit partition
     * count — the partition-invariance spec's entry point. */
-  def rfmScalable(orders: DataFrame, nPartitions: Int = 8): DataFrame =
-    Dedup.withCached(rollup(orders))(b => scalableOn(b, b.count(), nPartitions))
+  def rfmScalable(orders: DataFrame, nPartitions: Int = 8): DataFrame = {
+    val b = rollup(orders)
+    Settle.using(b)(Settle.shared(scalableOn(b, b.count(), nPartitions)))
+  }
 
   def oRfm: String =
     """WITH base AS (

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 
 /** Robust statistics per group — the outlier-resistant summary pair a
   * data-quality pipeline reads next to means: trimmed means (drop the
@@ -88,10 +88,10 @@ object Robust {
     val r1 = Scale.groupRanks(base, Seq("l_returnflag"),
       Seq(col("cents"), col("l_orderkey"), col("l_linenumber")),
       "r", totalOut = Some("n"), hotGroupsOverride = hotGroupsOverride)
-    Dedup.withCached(r1) { ranked =>
-      val med = ranked.filter(col("r") * 2 === col("n") + (col("n") % 2))
+    Settle.using(r1)(Settle.shared {
+      val med = r1.filter(col("r") * 2 === col("n") + (col("n") % 2))
         .select(col("l_returnflag"), col("cents").as("med_cents"))
-      val dev = ranked.join(broadcast(med), Seq("l_returnflag"))
+      val dev = r1.join(broadcast(med), Seq("l_returnflag"))
         .withColumn("dev", abs(col("cents") - col("med_cents")))
         .select(col("l_returnflag"), col("dev"), col("med_cents"),
           col("l_orderkey"), col("l_linenumber"))
@@ -101,7 +101,7 @@ object Robust {
       r2.filter(col("r") * 2 === col("n") + (col("n") % 2))
         .select(col("l_returnflag"), col("med_cents"),
           col("dev").as("mad_cents"), col("n"))
-    }
+    })
   }
 
   def qMadByFlag(spark: SparkSession, dir: String): DataFrame =

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 
 /** Scale mechanics that SCALE.md promises: key-salting for skewed
   * aggregations, bucketed co-located joins, and sketch aggregates for
@@ -136,10 +136,10 @@ object Scale {
       nPartitions: Int, knownTotal: Long = -1L): (DataFrame, Long) = {
     val spark = df.sparkSession
     import spark.implicits._
-    withControlPlaneCache(df) { d =>
-      val total = if (knownTotal >= 0L) knownTotal else d.count()
-      val withB = d.withColumn("_bkt",
-        bakedBucketExpr(d, order, 2 * nPartitions, total))
+    Settle.using(Seq(df).filterNot(cheapOverMaterialized): _*) {
+      val total = if (knownTotal >= 0L) knownTotal else df.count()
+      val withB = df.withColumn("_bkt",
+        bakedBucketExpr(df, order, 2 * nPartitions, total))
       val counts = withB.groupBy(col("_bkt")).count()
         .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
       val offsets = counts.scanLeft((0, 0L)) { case ((_, acc), (bkt, c)) =>
@@ -155,25 +155,16 @@ object Scale {
     }
   }
 
-  /** Transient cache for the rank family's CONTROL-PLANE passes (count,
-    * cut sample, per-bucket aggregates): persisted on entry, released
-    * before the returned (lazy) ranking frame ever executes — so the
-    * eager driver-side passes read the input once, while nothing
-    * rank-sized stays materialized into the ranking pass itself (the
-    * r16 bill this family just shed). The final pass recomputes the
-    * input from source exactly once, post-release. Skipped when the
-    * caller already cached the input (the [[ungroupedDial]] hot path,
-    * [[Classify.calibration]]) — unpersisting here would evict THEIR
-    * cache mid-flight. */
-  private def withControlPlaneCache[A](df: DataFrame)(body: DataFrame => A): A = {
-    val own = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE &&
-      !cheapOverMaterialized(df)
-    if (own) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try body(df)
-    finally if (own) df.unpersist(false)
-  }
-
-  /** True when re-scanning `df` costs no recompute worth caching away:
+  /** The rank family caches its input for its CONTROL-PLANE passes
+    * (count, cut sample, per-bucket aggregates) and releases it before
+    * the returned (lazy) ranking frame ever executes — so the eager
+    * driver-side passes read the input once, while nothing rank-sized
+    * stays materialized into the ranking pass itself. A caller's own
+    * cache ([[ungroupedDial]]'s hot path, [[Classify.calibration]]) is
+    * left alone by [[Settle.using]]; this check skips inputs that are
+    * cheap to re-scan anyway.
+    *
+    * True when re-scanning `df` costs no recompute worth caching away:
     * only projections/filters over already-materialized leaves — an
     * InMemoryRelation (a caller's cache: the dial-cached rollup behind
     * Rfm's slim projections) or a LogicalRDD (a localCheckpoint
@@ -211,19 +202,19 @@ object Scale {
       hot: (DataFrame, () => Long) => DataFrame): DataFrame =
     hotOverride match {
       case Some(false) => plain(rollup)
-      case Some(true) => Dedup.withCached(rollup) { b =>
+      case Some(true) => Settle.using(rollup)(Settle.shared {
         // the count is LAZY (ADVICE r16): hot consumers that discard n
         // (Pareto, Diagnostics) skip the job entirely on forced runs
-        lazy val n = b.count()
-        hot(b, () => n)
-      }
+        lazy val n = rollup.count()
+        hot(rollup, () => n)
+      })
       case None =>
         val threshold = hotRowThreshold(rollup)
         if (factCount < threshold) plain(rollup)
-        else Dedup.withCached(rollup) { b =>
-          val n = b.count()
-          if (n < threshold) plain(b) else hot(b, () => n)
-        }
+        else Settle.using(rollup)(Settle.shared {
+          val n = rollup.count()
+          if (n < threshold) plain(rollup) else hot(rollup, () => n)
+        })
     }
 
   /** Ungrouped 1-based rank AND inclusive running sum of a decimal
@@ -249,10 +240,10 @@ object Scale {
     import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType,
       StructField, StructType}
     val spark = df.sparkSession
-    withControlPlaneCache(df) { d =>
-    val total = d.count()
-    val withB = d
-      .withColumn("_bkt", bakedBucketExpr(d, order, 2 * nPartitions, total))
+    Settle.using(Seq(df).filterNot(cheapOverMaterialized): _*) {
+    val total = df.count()
+    val withB = df
+      .withColumn("_bkt", bakedBucketExpr(df, order, 2 * nPartitions, total))
       .withColumn("_v", value.cast(DecimalType(38, 6)))
     val perBkt = withB.groupBy(col("_bkt"))
       .agg(count(lit(1)).as("_c"), sum(col("_v")).as("_s"))
@@ -412,7 +403,7 @@ object Scale {
   /** Below this per-group row count the plain per-group window WINS on
     * measurement: one task sorting `n/|groups|` rows in memory beats the
     * grouped path's two shuffles + control-plane round trip. Measured
-    * crossover on this host (`graft.Probe hotgroup`, SCALE.md r10):
+    * crossover on this host (SCALE.md r10):
     * plain-window 3-group lineitem at 2M rows/group still ~1.8× faster;
     * the grouped path must only engage where a single sort task becomes
     * the bottleneck (spill + one core against a cluster). 8M is past
@@ -460,7 +451,7 @@ object Scale {
   /** True when `df` is a bare projection over leaf scans — the shape
     * whose count() the parquet reader answers from footer row counts
     * without decoding a single column, strictly cheaper than even the
-    * 1% sampled scan (measured: `graft.Probe dialcost`, SCALE.md r16).
+    * 1% sampled scan (measured: SCALE.md r16).
     * A Filter is excluded on purpose: a filtered count must decode the
     * predicate columns, which is sample-cost, not footer-cost. */
   private def scanOnly(df: DataFrame): Boolean = {

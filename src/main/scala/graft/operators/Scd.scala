@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 
 /** Slowly-changing-dimension type-2 versioning over an event log, plus the
   * incremental MERGE that applies a new event batch to existing history —
@@ -79,13 +79,13 @@ object Scd {
     // history feeds FOUR legs (closed, untouched-current, touched-current,
     // seeds); cached so its build (or table scan) runs once, not per leg —
     // in production history is a materialized table and this is a no-op
-    Dedup.withCached(history) { h =>
+    Settle.using(history)(Settle.shared {
       val batch = events(batchOrders)
       val keys = batch.select(col(key)).distinct()
-      val current = h.filter(col("is_current"))
+      val current = history.filter(col("is_current"))
       val touchedCurrent = current.join(keys, Seq(key), "left_semi")
       val untouchedCurrent = current.join(keys, Seq(key), "left_anti")
-      val closed = h.filter(!col("is_current"))
+      val closed = history.filter(!col("is_current"))
       // the open version re-enters the collapse as a seed event carrying its
       // version number; a tie below any real order key pins it first when a
       // batch event lands on the same timestamp
@@ -94,7 +94,7 @@ object Scd {
         col("version").as("v0"))
       val rebuilt = buildFromEvents(seeds.unionByName(batch))
       closed.unionByName(untouchedCurrent).unionByName(rebuilt)
-    }
+    })
 
   private val outOrder = Seq(col(key), col("version"))
 

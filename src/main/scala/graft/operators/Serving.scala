@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Tables
+import graft.{Settle, Tables}
 import graft.functions.Exprs
 
 /** The reference's Gold serving queries (sql/schema.sql:211-311) as
@@ -137,12 +137,12 @@ object Serving {
       .join(customer.select(col("c_custkey"), col("c_nationkey").as("nation")),
         col("c_custkey") === col("o_custkey"))
       .select(col("nation"), col("c_custkey").as("custkey"), col("cents"))
-    Dedup.withCached(spend) { s =>
+    Settle.using(spend)(Settle.shared {
       val w = Window.partitionBy(col("nation"))
         .orderBy(col("cents").desc, col("custkey"))
-      val top = s.withColumn("rnk", row_number().over(w))
+      val top = spend.withColumn("rnk", row_number().over(w))
         .filter(col("rnk") <= k)
-      val totals = s.groupBy(col("nation"))
+      val totals = spend.groupBy(col("nation"))
         .agg(sum(col("cents")).cast("long").as("t_cents"),
           count(lit(1)).as("t_members"))
       val topAgg = top.groupBy(col("nation"))
@@ -157,7 +157,7 @@ object Serving {
       top.select(col("nation"), col("rnk").cast("long").as("rnk"),
           col("custkey"), col("cents"), lit(1L).as("n_members"))
         .unionByName(other)
-    }
+    })
   }
 
   def qTopKWithOther(spark: SparkSession, dir: String): DataFrame =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 import graft.functions.TextFns
 
 /** Fully ORACLE-ABLE mergeable sketches: KMV (bottom-k) distinct
@@ -87,11 +87,11 @@ object Sketches {
     * trusting the sketch at scale. */
   def kmvDistinct(events: DataFrame): DataFrame = {
     val dh = distinctHashes(events, "event_type", "user_id")
-    Dedup.withCached(dh) { d =>
+    Settle.using(dh)(Settle.shared {
       val w = Window.partitionBy(col("event_type")).orderBy(col("h"))
-      val sig = d.withColumn("rn", row_number().over(w)).filter(col("rn") <= K)
+      val sig = dh.withColumn("rn", row_number().over(w)).filter(col("rn") <= K)
       val est = kmvEstimate(sig, "event_type")
-      val exact = d.groupBy(col("event_type"))
+      val exact = dh.groupBy(col("event_type"))
         .agg(count(lit(1)).as("exact_distinct"))
       est.join(exact, "event_type")
         .withColumn("err_bp",
@@ -99,7 +99,7 @@ object Sketches {
         .select(col("event_type"), col("k_kept"), col("kth_hash"),
           col("est_distinct"), col("exact_distinct"), col("err_bp"))
         .orderBy(col("event_type"))
-    }
+    })
   }
 
   def qKmvDistinct(spark: SparkSession, dir: String): DataFrame =
@@ -268,10 +268,10 @@ object Sketches {
     val dh = events.select(col("event_type"), to_date(col("ts")).as("day"),
         TextFns.md5u56(col("user_id").cast("string")).as("h"))
       .distinct()
-    Dedup.withCached(dh) { d =>
+    Settle.using(dh)(Settle.shared {
       val wDay = Window.partitionBy(col("event_type"), col("day"))
         .orderBy(col("h"))
-      val daily = d.withColumn("rn", row_number().over(wDay))
+      val daily = dh.withColumn("rn", row_number().over(wDay))
         .filter(col("rn") <= K)
         .select(col("event_type"), col("day"), col("h"))
       val wType = Window.partitionBy(col("event_type")).orderBy(col("h"))
@@ -279,7 +279,7 @@ object Sketches {
         .withColumn("rn", row_number().over(wType))
         .filter(col("rn") <= K)
       val est = kmvEstimate(merged, "event_type")
-      val exact = d.select(col("event_type"), col("h")).distinct()
+      val exact = dh.select(col("event_type"), col("h")).distinct()
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("exact_distinct"))
       val days = daily.groupBy(col("event_type"))
@@ -288,7 +288,7 @@ object Sketches {
         .select(col("event_type"), col("n_days"), col("k_kept"),
           col("est_distinct"), col("exact_distinct"))
         .orderBy(col("event_type"))
-    }
+    })
   }
 
   def qKmvDailyMerge(spark: SparkSession, dir: String): DataFrame =
@@ -343,13 +343,13 @@ object Sketches {
     val dh = events.select(col("event_type"), to_date(col("ts")).as("day"),
         TextFns.md5u56(col("user_id").cast("string")).as("h"))
       .distinct()
-    Dedup.withCached(dh) { d =>
+    Settle.using(dh)(Settle.shared {
       val wDay = Window.partitionBy(col("event_type"), col("day"))
         .orderBy(col("h"))
-      val daily = d.withColumn("rn", row_number().over(wDay))
+      val daily = dh.withColumn("rn", row_number().over(wDay))
         .filter(col("rn") <= K)
         .select(col("event_type"), col("day"), col("h"))
-      val days = d.select(col("event_type"), col("day")).distinct()
+      val days = dh.select(col("event_type"), col("day")).distinct()
       def pool(src: DataFrame): DataFrame = src.as("s")
         .join(days.as("d"),
           col("s.event_type") === col("d.event_type") &&
@@ -383,7 +383,7 @@ object Sketches {
       // oracle gate, which keeps the range-join formulation).
       val wRun = Window.partitionBy(col("event_type"), col("h"))
         .orderBy(col("day"))
-      val runs = d
+      val runs = dh
         .withColumn("prev_day", lag(col("day"), 1).over(wRun))
         .withColumn("next_day", lead(col("day"), 1).over(wRun))
       val starts = runs.filter(col("prev_day").isNull ||
@@ -414,7 +414,7 @@ object Sketches {
       est.join(exact, Seq("event_type", "day"))
         .select(col("event_type"), col("day"), col("k_kept"),
           col("est_distinct"), col("exact_distinct"))
-    }
+    })
   }
 
   def qKmvRollingDistinct(spark: SparkSession, dir: String): DataFrame =
@@ -489,9 +489,9 @@ object Sketches {
     * by construction — the spec pins it). */
   def cmsTopTerms(docs: DataFrame): DataFrame = {
     val counts = termCounts(docs)
-    Dedup.withCached(counts) { c =>
-      val top = c.orderBy(col("cnt").desc, col("term")).limit(20)
-      val cells = cmsCells(c)
+    Settle.using(counts)(Settle.shared {
+      val top = counts.orderBy(col("cnt").desc, col("term")).limit(20)
+      val cells = cmsCells(counts)
       val probes = top
         .select(explode(array((0 until D).map(lit): _*)).as("i"),
           col("term"), col("cnt"))
@@ -504,7 +504,7 @@ object Sketches {
         .withColumn("overest", col("est_cnt") - col("exact_cnt"))
         .select(col("term"), col("exact_cnt"), col("est_cnt"), col("overest"))
         .orderBy(col("exact_cnt").desc, col("term"))
-    }
+    })
   }
 
   def qCmsTopTerms(spark: SparkSession, dir: String): DataFrame =

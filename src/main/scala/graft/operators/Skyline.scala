@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 
 /** Skyline (Pareto-frontier) query: the rows no other row beats on both
   * criteria at once — the "best tradeoffs" set (cheapest for its size,
@@ -50,9 +50,9 @@ object Skyline {
         col(gainCol).cast("long").as("gain"))
       .filter(col("cost").isNotNull && col("gain").isNotNull)
     val levels = costLevels(p, nPartitions)
-    val frontierLevels = Dedup.withCached(levels) { lv =>
+    val frontierLevels = Settle.using(levels)(Settle.shared {
       // control plane: nPartitions (pid, max) rows, nothing data-sized
-      val maxima = lv.groupBy(col("_pid")).agg(max(col("best_gain")).as("m"))
+      val maxima = levels.groupBy(col("_pid")).agg(max(col("best_gain")).as("m"))
         .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
       // strict prefix: the best gain in any STRICTLY earlier partition
       // (every row there has strictly lower cost than every row here —
@@ -62,9 +62,9 @@ object Skyline {
           case (acc, m) => Some(acc.fold(m)(math.max(_, m)))
         }
       // frontier levels are the output scale (≤ levels, typically ≪) —
-      // materialize so the join below doesn't recompute the fixpoint
-      frontierOfLevels(lv, offsets).localCheckpoint(true)
-    }
+      // settled so the join below doesn't recompute the fixpoint
+      frontierOfLevels(levels, offsets)
+    })
     // the level keys share attribute ids with p (groupBy preserves them
     // through the checkpoint) — qualify via aliases, the self-join idiom
     p.as("pp").join(frontierLevels.as("fl"),

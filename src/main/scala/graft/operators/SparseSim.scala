@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 
 /** Sparse (lexical) similarity top-k: for every document, the k most
   * similar documents by IDF-weighted shingle cosine — the sparse-vector
@@ -76,8 +76,8 @@ object SparseSim {
         first(col("a.n2")).as("na2"), first(col("b.n2")).as("nb2"))
     // the pair aggregate feeds BOTH directions of the symmetric view —
     // materialize it once instead of re-running the candidate join
-    Dedup.withCached(dots) { d =>
-      val sym = d.unionByName(d.select(
+    Settle.using(dots)(Settle.shared {
+      val sym = dots.unionByName(dots.select(
         col("doc_b").as("doc_a"), col("doc_a").as("doc_b"),
         col("shared_shingles"), col("dot"),
         col("nb2").as("na2"), col("na2").as("nb2")))
@@ -90,7 +90,7 @@ object SparseSim {
         .filter(col("rank") <= K)
         .select(col("doc_a").as("doc_id"), col("doc_b").as("neighbor_id"),
           col("shared_shingles"), col("cosine"), col("rank"))
-    }
+    })
   }
 
   def qSparseTopK(spark: SparkSession, dir: String): DataFrame =
@@ -135,8 +135,8 @@ object SparseSim {
     // df aggregate and the probe side), the df aggregate runs once
     // (dfT feeds the collision audit and the postings join), and the
     // explode + df join runs once (post feeds the norm aggregate and
-    // the final join) — nesting withCached here would checkpoint per
-    // level, a full extra materialization pass
+    // the final join) — a checkpoint per frame would be a full extra
+    // materialization pass each
     val sh = Dedup.shingled(docs)
     val ex = sh.select(col("doc_id"), explode_outer(col("shingles")).as("sh"))
       .filter(col("sh").isNotNull)
@@ -148,7 +148,7 @@ object SparseSim {
       .crossJoin(broadcast(n1))
       .withColumn("wgt", expr(s"(nn * $IdfScale) div df"))
       .select(col("doc_id"), col("sh"), col("sh_id"), col("wgt"))
-    Dedup.withCachedAll(sh, dfT, post) {
+    Settle.using(sh, dfT, post)(Settle.shared {
       val collisions = dfT.groupBy(col("sh_id"))
         .agg(count(lit(1)).as("n")).filter(col("n") > 1).count()
       require(collisions == 0L,
@@ -158,7 +158,7 @@ object SparseSim {
         .agg(sum(expr("CAST(wgt AS DECIMAL(19,0)) * CAST(wgt AS DECIMAL(19,0))"))
           .as("n2"))
       post.join(nrm, Seq("doc_id"))
-    }
+    })
   }
 
   /** Top-k for a query batch against a persisted postings index: the

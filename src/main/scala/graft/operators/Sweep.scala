@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 
 /** Two ops-analytics classics over the event stream, both in exact
   * integer arithmetic:
@@ -49,8 +49,7 @@ object Sweep {
     // below checkpoints its output eagerly, so the unpersist in
     // finally is safe (review r15 finding)
     val bounds = starts.union(ends)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Settle.using(bounds) {
       val hot = hotGroupsOverride.getOrElse(
         Scale.hotGroups(bounds, Seq("event_type")))
       val running = if (hot) {
@@ -64,18 +63,18 @@ object Sweep {
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         bounds.withColumn("run", sum(col("delta")).over(w))
       }
-      Dedup.withCached(running) { r =>
-        val peaks = r.groupBy(col("event_type"))
+      Settle.using(running)(Settle.shared {
+        val peaks = running.groupBy(col("event_type"))
           .agg(max(col("run")).as("peak_concurrency"),
             (count(lit(1)) / 2).cast("long").as("n_intervals"))
-        r.join(peaks, Seq("event_type"))
+        running.join(peaks, Seq("event_type"))
           .filter(col("run") === col("peak_concurrency"))
           .groupBy(col("event_type"), col("peak_concurrency"), col("n_intervals"))
           .agg(min(col("t")).as("peak_at"))
           .select(col("event_type"), col("n_intervals"),
             col("peak_concurrency"), col("peak_at"))
-      }
-    } finally bounds.unpersist(false)
+      })
+    }
   }
 
   def qPeakConcurrency(spark: SparkSession, dir: String): DataFrame =

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 import graft.functions.TextFns
 
 /** Document-corpus text analysis: quality stats, language ID,
@@ -150,13 +150,14 @@ object TextAnalysis {
     * Dedup.shingleJaccardPairs — a fingerprint in k docs makes k²
     * pairs, so template text would otherwise blow the join up. */
   def winnowingOverlapPairs(docs: DataFrame, minShared: Int = 2,
-      maxFpDocFreq: Int = 100): DataFrame =
+      maxFpDocFreq: Int = 100): DataFrame = {
     // cache the ARRAY-form sketch: it builds map-only (no window
     // shuffle/sort like winnowedRows), and the cache is an optimizer
     // barrier, so exploding it cannot trigger the nested-lambda
     // re-substitution blowup that makes the uncached array form unsafe
     // (see the CAUTION on winnowed). Cached for this computation only.
-    graft.operators.Dedup.withCached(winnowed(docs)) { w =>
+    val w = winnowed(docs)
+    Settle.using(w)(Settle.shared {
       val ex = w.select(col("doc_id"), explode(col("fps")).as("fp"))
       val hot = ex.groupBy(col("fp")).agg(count(lit(1)).as("df"))
         .filter(col("df") > maxFpDocFreq).select(col("fp"))
@@ -166,7 +167,8 @@ object TextAnalysis {
         .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
         .agg(count(lit(1)).as("shared_fps"))
         .filter(col("shared_fps") >= minShared)
-    }
+    })
+  }
 
   def qWinnowingOverlap(spark: SparkSession, dir: String): DataFrame =
     winnowingOverlapPairs(Tables.documents(spark, dir))
@@ -178,15 +180,17 @@ object TextAnalysis {
     * aggregation, then a TakeOrderedAndProject top-k — the corpus-stats
     * shape that runs as two stages at any scale. Deterministic total
     * order: df desc, then the shingle itself. */
-  def topNgrams(docs: DataFrame, k: Int = 20): DataFrame =
-    // withCached: the cache is an optimizer barrier so the explode can't
-    // re-inline the shingle transform per element (quadratic blowup)
-    graft.operators.Dedup.withCached(graft.operators.Dedup.shingled(docs)) { sh =>
+  def topNgrams(docs: DataFrame, k: Int = 20): DataFrame = {
+    // the cache is an optimizer barrier so the explode can't re-inline
+    // the shingle transform per element (quadratic blowup)
+    val sh = Dedup.shingled(docs)
+    Settle.using(sh)(Settle.shared {
       sh.select(explode(col("shingles")).as("ngram"))
         .groupBy(col("ngram")).agg(count(lit(1)).as("df"))
         .orderBy(col("df").desc, col("ngram"))
         .limit(k)
-    }
+    })
+  }
 
   def qTopNgrams(spark: SparkSession, dir: String): DataFrame =
     topNgrams(Tables.documents(spark, dir))
@@ -278,10 +282,10 @@ object TextAnalysis {
     val tagged = withSplit(docs)
       .select(col("doc_id"), col("split"), TextFns.words(col("text")).as("ws"))
       .select(col("doc_id"), col("split"), TextFns.shinglesFromWords(col("ws")).as("shingles"))
-    // withCached: one shingling pass feeds both join legs, and the cache
+    // one shingling pass feeds both join legs, and the cache
     // barrier keeps the explode from re-inlining the shingle transform
-    graft.operators.Dedup.withCached(tagged) { cached =>
-      val sh = cached.select(col("doc_id"), col("split"), explode(col("shingles")).as("sh"))
+    Settle.using(tagged)(Settle.shared {
+      val sh = tagged.select(col("doc_id"), col("split"), explode(col("shingles")).as("sh"))
       val train = sh.filter(col("split") === "train")
         .select(col("doc_id").as("train_doc"), col("sh"))
       val test = sh.filter(col("split") === "test")
@@ -290,7 +294,7 @@ object TextAnalysis {
         .groupBy(col("train_doc"), col("test_doc"))
         .agg(count(lit(1)).as("shared_shingles"))
         .filter(col("shared_shingles") >= minShared)
-    }
+    })
   }
 
   def qContamination(spark: SparkSession, dir: String): DataFrame =
@@ -469,18 +473,18 @@ object TextAnalysis {
     // the explode feeds BOTH the vocabulary rollup and the scoring pass —
     // cache the RAW occurrence stream once (not a (doc, trigram)-keyed
     // aggregate: that intermediate would add a doc×vocab-sized shuffle)
-    Dedup.withCached(tris) { t =>
-      val vocab = t.groupBy(col("tri"))
+    Settle.using(tris)(Settle.shared {
+      val vocab = tris.groupBy(col("tri"))
         .agg(count(lit(1)).as("cnt"))
         .select(col("tri"), TextFns.log2Floor(col("cnt")).cast("long").as("bucket"))
-      t.join(broadcast(vocab), Seq("tri"))
+      tris.join(broadcast(vocab), Seq("tri"))
         .groupBy(col("doc_id"))
         .agg(
           count(lit(1)).as("n_tris"),
           (sum(col("bucket")).cast("double") /
             count(lit(1)).cast("double")).as("avg_bucket"),
           min(col("bucket")).as("rarest_bucket"))
-    }
+    })
   }
 
   /** Corpus-wide top-k terms by total occurrences, computed EXACTLY via

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Settle, Tables}
 
 /** The remaining canonical TPC-H shapes (Q13, Q16, Q17, Q18, Q20, Q21)
   * adapted to the fixture star schema: no partsupp (lineitem-derived
@@ -213,12 +213,12 @@ object TpchMore {
     // CACHED per-part aggregate instead of re-scanning lineitem and
     // redoing the pair aggregation (the uncached two-leg form doubled
     // the fact-table scan — the biggest cost in the query)
-    Dedup.withCached(perPart) { pp =>
-      pp.crossJoin(broadcast(pp.agg(sum(col("part_value")).as("total"))))
+    Settle.using(perPart)(Settle.shared {
+      perPart.crossJoin(broadcast(perPart.agg(sum(col("part_value")).as("total"))))
         .filter(col("part_value") * 1500 > col("total"))
         .select(col("l_partkey"), col("part_value").cast("double").as("part_value"))
         .orderBy(col("part_value").desc, col("l_partkey"))
-    }
+    })
   }
 
   def q11OracleSql: String =
@@ -249,10 +249,10 @@ object TpchMore {
     // build, NOT-EXISTS build); cache it once or the biggest join in the
     // query runs three times (ReuseExchange can't unify the differently-
     // filtered/projected legs)
-    Dedup.withCached(joined) { lf =>
-      val late = lf.filter(col("late"))
+    Settle.using(joined)(Settle.shared {
+      val late = joined.filter(col("late"))
       late
-        .join(lf.select(col("l_orderkey").as("k2"), col("l_suppkey").as("s2")),
+        .join(joined.select(col("l_orderkey").as("k2"), col("l_suppkey").as("s2")),
           col("l_orderkey") === col("k2") && col("l_suppkey") =!= col("s2"),
           "left_semi")
         .join(late.select(col("l_orderkey").as("k3"), col("l_suppkey").as("s3")),
@@ -263,7 +263,7 @@ object TpchMore {
         .groupBy(col("s_name")).agg(count(lit(1)).as("numwait"))
         .orderBy(col("numwait").desc, col("s_name"))
         .limit(100)
-    }
+    })
   }
 
   def q21OracleSql: String =

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Settle, Tables}
 import graft.functions.TextFns
 
 /** Web-crawl text extraction + domain-level admission — the front door
@@ -153,8 +153,9 @@ object WebText {
     // funnel (tokenize + shingle + 4 quality scans) ran twice (2
     // documents scans in the before plan). The verdict is 3 slim
     // columns per doc; cache it and pay the funnel once.
-    Dedup.withCached(Curation.funnelVerdict(docs)
-      .select(col("doc_id"), col("source"), col("keep").as("doc_keep"))) { verd =>
+    val verd = Curation.funnelVerdict(docs)
+      .select(col("doc_id"), col("source"), col("keep").as("doc_keep"))
+    Settle.using(verd)(Settle.shared {
     val rep = verd.groupBy(col("source")).agg(
         count(lit(1)).as("source_total"),
         count_if(col("doc_keep")).as("source_kept"))
@@ -165,7 +166,7 @@ object WebText {
       .select(col("doc_id"), col("source"), col("doc_keep"),
         col("source_total"), col("source_kept"), col("source_reputable"),
         col("admitted"))
-    }
+    })
   }
 
   def qDomainReputation(spark: SparkSession, dir: String): DataFrame =

@@ -6,6 +6,8 @@ import java.util.Properties
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Settle
+
 /** Gold-layer JDBC serving sink (gold_loader.py re-expressed).
   *
   * The reference "handles" replays by letting the unique index reject
@@ -100,12 +102,11 @@ object JdbcSink {
     // the cache each would re-run the remote key probe and the anti-join
     // (at a year of Gold history that doubles the probe cost per load)
     val fresh = newRowsOnly(df, existingNamed, keys)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Settle.using(fresh) {
       val n = fresh.count()
       if (n > 0) fresh.write.mode("append").jdbc(url, table, props)
       n
-    } finally fresh.unpersist()
+    }
   }
 
   /** Plain append (exact reference parity mode, S9). */
@@ -244,15 +245,18 @@ object JdbcSink {
   }
 
   /** Retention cleanup (cleanup_old_data, sql/schema.sql:259-286):
-    * driver-side delete, returns rows removed. `dateTyped` switches the
-    * bind parameter to java.sql.Date for DATE columns (Derby won't coerce
-    * a TIMESTAMP bind against a DATE column). */
+    * driver-side delete of every row dated before `cutoff` (UTC midnight
+    * for timestamp columns), returns rows removed. The caller derives
+    * `cutoff` from the same as-of date as the parquet sweeps, so every
+    * tier runs on one clock. `dateTyped` switches the bind parameter to
+    * java.sql.Date for DATE columns (Derby won't coerce a TIMESTAMP bind
+    * against a DATE column). */
   def retentionDelete(url: String, table: String, tsCol: String,
-      keepDays: Int, dateTyped: Boolean = false): Int = withConn(url) { c =>
-    val cutoffMs = System.currentTimeMillis() - keepDays * 86400000L
+      cutoff: java.time.LocalDate, dateTyped: Boolean = false): Int = withConn(url) { c =>
     val ps = c.prepareStatement(s"DELETE FROM $table WHERE $tsCol < ?")
-    if (dateTyped) ps.setDate(1, new java.sql.Date(cutoffMs))
-    else ps.setTimestamp(1, new java.sql.Timestamp(cutoffMs))
+    if (dateTyped) ps.setDate(1, java.sql.Date.valueOf(cutoff))
+    else ps.setTimestamp(1, java.sql.Timestamp.from(
+      cutoff.atStartOfDay(java.time.ZoneOffset.UTC).toInstant))
     ps.executeUpdate()
   }
 }

@@ -77,9 +77,9 @@ class HotGroupWiringSpec extends SparkSpecBase {
     assert(byNation == direct, "top+OTHER must partition the spend exactly")
     // plan pin: the only window is the rank≤k one and the group-limit
     // rule bounds it map-side; the tail is never ranked (the lineage
-    // escape hatch keeps withCached from checkpointing the result,
+    // escape hatch keeps Settle.shared from checkpointing the result,
     // which would hide the window from executedPlan)
-    System.setProperty("graft.explain.lineage", "true")
+    System.setProperty(Settle.LineageProp, "true")
     try {
       val plan = Serving.topKWithOther(cust, ord)
         .queryExecution.executedPlan.toString
@@ -97,7 +97,7 @@ class HotGroupWiringSpec extends SparkSpecBase {
             s"unbounded Window at plan line $i:\n$plan")
         }
       }
-    } finally System.clearProperty("graft.explain.lineage")
+    } finally System.clearProperty(Settle.LineageProp)
   }
 
   test("KMV bottom-K windows are group-limit bounded (audit-table claim)") {
@@ -105,13 +105,13 @@ class HotGroupWiringSpec extends SparkSpecBase {
     // map-side bounded via InferWindowGroupLimit — pin that the rule
     // actually fires on the KMV signature build (low-card event_type
     // over every distinct user hash: the shape where the bound matters)
-    System.setProperty("graft.explain.lineage", "true")
+    System.setProperty(Settle.LineageProp, "true")
     try {
       val plan = graft.operators.Sketches
         .kmvDistinct(Tables.events(spark, sf))
         .queryExecution.executedPlan.toString
       assert(plan.contains("WindowGroupLimit"),
         s"kmv bottom-K window not group-limit bounded:\n$plan")
-    } finally System.clearProperty("graft.explain.lineage")
+    } finally System.clearProperty(Settle.LineageProp)
   }
 }

@@ -47,9 +47,9 @@ class LatenessSpec extends SparkSpecBase {
       assert(got == ref, s"nPartitions=$n diverged")
     }
     // and the plan never moves all rows to one window task (the
-    // lineage escape hatch keeps withCached from checkpointing the
+    // lineage escape hatch keeps Settle.shared from checkpointing the
     // result, which would hide the window from executedPlan)
-    System.setProperty("graft.explain.lineage", "true")
+    System.setProperty(Settle.LineageProp, "true")
     try {
       val plan = Lateness.latenessProfile(events, nPartitions = 3)
         .queryExecution.executedPlan.toString
@@ -58,7 +58,7 @@ class LatenessSpec extends SparkSpecBase {
       // that SinglePartition exchange carries ≤1 row per partition)
       assert(plan.contains("windowspecdefinition(_pid"),
         s"hwm window is not partition-local:\n$plan")
-    } finally System.clearProperty("graft.explain.lineage")
+    } finally System.clearProperty(Settle.LineageProp)
   }
 
   test("null-timestamp ranges do not crash the control-plane collect") {

@@ -89,13 +89,14 @@ class PipelineSpec extends SparkSpecBase {
   }
 
   test("retention prunes expired bronze partitions + gold rows; ledger records cleanup") {
+    import org.apache.spark.sql.functions._
     val wh = freshWarehouse()
     val url = s"jdbc:derby:memory:graft${System.nanoTime()};create=true"
     // events span 2024-01-01..30; asOf 2024-02-10 with bronzeDays=30 puts
     // the cutoff at 2024-01-11 → day dirs 1..10 expire AFTER processing;
-    // goldDays=2000 keeps all 2024-dated gold rows relative to wall-clock
+    // goldDays=365 keeps every gold row (cutoff 2023-02-10)
     val keep = Pipeline.Retention(bronzeDays = 30, silverDays = 3650,
-      goldDays = 2000, asOf = java.time.LocalDate.of(2024, 2, 10))
+      goldDays = 365, asOf = java.time.LocalDate.of(2024, 2, 10))
     val r1 = Pipeline.run(spark, Pipeline.Config(sf, wh, Some(url),
       retention = Some(keep)))
     assert(r1.retentionDeleted == 10, s"10 expired bronze day dirs, got ${r1.retentionDeleted}")
@@ -106,13 +107,52 @@ class PipelineSpec extends SparkSpecBase {
     val log = new JdbcSink.PipelineLog(url)
     assert(log.statusOf(r1.executionId, "cleanup_old_data").exists(_._1 == "SUCCESS"))
 
-    // goldDays=1: every 2024-dated gold row is past retention → swept
+    // goldDays=20: the gold cutoff is asOf − 20 = 2024-01-21, on the same
+    // clock as the parquet sweeps — exactly the rows dated before it go
+    // (20 days × 5 event types in the daily tier); the bronze/silver
+    // tiers have nothing left to sweep
+    val cutoff = java.sql.Timestamp.from(java.time.Instant.parse("2024-01-21T00:00:00Z"))
+    val tiers = Seq("gold_events_detailed", "gold_events_daily", "gold_events_hourly")
+    def sizes = tiers.map(t => JdbcSink.readTable(spark, url, t).count())
+    val before = sizes
     val r2 = Pipeline.run(spark, Pipeline.Config(sf, wh, Some(url),
+      retention = Some(keep.copy(goldDays = 20))))
+    val expired = Seq(687L, 100L, 589L)
+    assert(r2.retentionDeleted == expired.sum, s"deleted ${r2.retentionDeleted}")
+    assert(sizes == before.zip(expired).map { case (n, e) => n - e })
+    assert(JdbcSink.readTable(spark, url, "gold_events_detailed")
+      .agg(min(col("ts"))).head().getTimestamp(0).compareTo(cutoff) >= 0)
+    assert(JdbcSink.readTable(spark, url, "gold_events_daily")
+      .agg(min(col("date"))).head().getDate(0).toString == "2024-01-21")
+
+    // goldDays=1: every 2024-dated gold row is past retention → swept.
+    // A fresh warehouse: a later run over the one above would re-load
+    // the expired rows from Silver, whose every run re-appends it
+    val wh2 = freshWarehouse()
+    val url2 = s"jdbc:derby:memory:graft${System.nanoTime()};create=true"
+    val r3 = Pipeline.run(spark, Pipeline.Config(sf, wh2, Some(url2),
       retention = Some(keep.copy(goldDays = 1))))
-    assert(JdbcSink.readTable(spark, url, "gold_events_daily").count() == 0)
-    assert(JdbcSink.readTable(spark, url, "gold_events_detailed").count() == 0)
-    assert(JdbcSink.readTable(spark, url, "gold_events_hourly").count() == 0)
-    assert(r2.retentionDeleted >= goldBefore, s"deleted ${r2.retentionDeleted}")
+    tiers.foreach(t => assert(JdbcSink.readTable(spark, url2, t).count() == 0, t))
+    assert(r3.retentionDeleted == 10 + r3.goldRowsLoaded, s"deleted ${r3.retentionDeleted}")
+  }
+
+  test("a run whose gold load fails leaves nothing cached") {
+    val wh = freshWarehouse()
+    val url = s"jdbc:derby:memory:graft${System.nanoTime()};create=true"
+    // a pre-created Gold table whose schema rejects the append: an extra
+    // NOT NULL column the pipeline never writes
+    val c = java.sql.DriverManager.getConnection(url)
+    try c.createStatement().executeUpdate(
+      """CREATE TABLE gold_events_detailed (
+        |  "event_id" BIGINT NOT NULL, "ts" TIMESTAMP NOT NULL,
+        |  "user_id" BIGINT, "event_type" VARCHAR(32), "value" DOUBLE,
+        |  "data_quality_score" INT, "heat_index" DOUBLE,
+        |  "owner" VARCHAR(16) NOT NULL)""".stripMargin)
+    finally c.close()
+    spark.catalog.clearCache()
+    intercept[Exception](Pipeline.run(spark, Pipeline.Config(sf, wh, Some(url))))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the enriched Silver frame outlived its failed run")
   }
 
   test("parquet-mode gold tier is partitioned and swept by goldDays") {

@@ -126,11 +126,11 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("q21 EXISTS/NOT-EXISTS resolve to hash semi/anti joins, never nested loops") {
-    // q21 caches its shared join leg via withCached, whose checkpoint
+    // q21 caches its shared join leg via Settle, whose checkpoint
     // truncates lineage; the lineage prop keeps the full plan visible
-    sys.props("graft.explain.lineage") = "true"
+    sys.props(Settle.LineageProp) = "true"
     val plan = try physicalPlan(graft.operators.TpchMore.q21WaitingSuppliers(spark, sf))
-    finally sys.props.remove("graft.explain.lineage")
+    finally sys.props.remove(Settle.LineageProp)
     assert(plan.contains("LeftSemi") || plan.contains("left_semi"), plan)
     assert(plan.contains("LeftAnti") || plan.contains("left_anti"), plan)
     assert(!plan.contains("NestedLoop"),

@@ -398,4 +398,33 @@ class WebGraphSpec extends SparkSpecBase {
     assert(sums == n)
     assert(out.select($"cluster").distinct().count() <= Ivf.Cells)
   }
+
+  private val leakStar = Seq((0L, 1L), (0L, 2L), (0L, 3L), (1L, 2L),
+    (1L, 0L), (2L, 0L), (3L, 0L), (2L, 1L))
+
+  private def cacheEmpty: Boolean = spark.sharedState.cacheManager.isEmpty
+
+  test("pageRank, triangleCounts and bfsHops leave the cache manager as they found it") {
+    // an edge cache must not outlive the call: it would stay for the session's lifetime
+    spark.catalog.clearCache()
+    val directed = leakStar.toDF("src", "dst")
+    val undirected = leakStar.filter { case (u, v) => u < v }.toDF("u", "v")
+    Graph.pageRank(directed, iterations = 2).collect()
+    assert(cacheEmpty, "pageRank leaked its edge cache")
+    Graph.pageRank(directed, iterations = 2, broadcastRanks = Some(false)).collect()
+    assert(cacheEmpty, "pageRank (shuffle mode) leaked its edge cache")
+    val tris = Graph.triangleCounts(undirected).collect()
+    assert(tris.nonEmpty)
+    assert(cacheEmpty, "triangleCounts leaked its edge caches")
+    Graph.bfsHops(directed, Seq(3L).toDF("node"), maxHops = 3).collect()
+    assert(cacheEmpty, "bfsHops leaked its edge cache")
+
+    // a caller-cached edge frame stays cached through every call
+    val pinned = directed.cache()
+    Graph.pageRank(pinned, iterations = 2).collect()
+    Graph.bfsHops(pinned, Seq(3L).toDF("node"), maxHops = 3).collect()
+    assert(pinned.storageLevel == org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    pinned.unpersist(true)
+    assert(cacheEmpty)
+  }
 }
